@@ -78,41 +78,6 @@ class Bloom:
         np.bitwise_or(self.bits, other.bits, out=self.bits)
 
 
-def bloom_from_hashes_df(df: DataFrame, capacity: int, fpp: float = 0.01,
-                         hash_col: str = "url_hash") -> Bloom:
-    """Distributed bloom build: each partition sets bits into a local
-    bitmap (vectorized numpy inside mapInPandas), the driver OR-merges the
-    per-partition bitmaps. Shuffle-free; driver traffic is
-    ``num_partitions × m/8`` bytes (the bitmap size is fixed by capacity,
-    NOT by row count — this is what makes the build valid at 10^10 rows,
-    unlike collecting hashes). Used for both the per-micro-batch delta
-    merge and the resume-time rebuild."""
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401 (parity with module)
-
-    proto = Bloom(capacity, fpp)
-    m, k = proto.m, proto.k
-
-    def build(batches):
-        local = Bloom.__new__(Bloom)
-        local.m, local.k = m, k
-        local.bits = np.zeros(m // 8, dtype=np.uint8)
-        any_rows = False
-        for pdf in batches:
-            if len(pdf):
-                any_rows = True
-                local.add(pdf[hash_col].to_numpy(dtype=np.int64))
-        if any_rows:
-            yield pd.DataFrame({"bits": [local.bits.tobytes()]})
-
-    parts = df.select(hash_col).mapInPandas(build, "bits binary").collect()
-    for row in parts:
-        np.bitwise_or(proto.bits,
-                      np.frombuffer(row["bits"], dtype=np.uint8),
-                      out=proto.bits)
-    return proto
-
-
 class ShardedBloom:
     """Bloom sharded by pmod(hash, n_shards) — the 10^10-scale layout: each
     shard stays bounded (≤ ``max_shard_bytes``), shards are built and
@@ -183,9 +148,7 @@ def sharded_bloom_from_hashes_df(df: DataFrame, capacity: int,
     the driver ORs them ONE AT A TIME via ``toLocalIterator`` — peak driver
     memory = the assembled filter + a single shard bitmap, and total driver
     traffic = n_shards × shard_bytes = the filter size, independent of row
-    count. This is the 10^10-scale build the single-bitmap
-    ``bloom_from_hashes_df`` (driver traffic = partitions × full bitmap)
-    cannot do."""
+    count, which keeps the build valid at 10^10 rows."""
     proto = ShardedBloom(capacity, fpp, n_shards, max_shard_bytes)
     k_shards = proto.n_shards
     m, k = proto.shards[0].m, proto.shards[0].k
@@ -246,7 +209,7 @@ def build_visited_bloom(config, visited: DataFrame | None) -> ShardedBloom:
         max_shard_bytes=config.bloom_max_shard_bytes)
 
 
-def bloom_prefilter(candidates: DataFrame, bloom: "ShardedBloom | Bloom",
+def bloom_prefilter(candidates: DataFrame, bloom: ShardedBloom,
                     hash_col: str = "url_hash") -> DataFrame:
     """Tag each row with ``__maybe_seen`` from the broadcast bloom. A bloom
     has no false negatives, so ``False`` ⇒ the URL is definitely new and can
@@ -264,7 +227,7 @@ def bloom_prefilter(candidates: DataFrame, bloom: "ShardedBloom | Bloom",
 
 
 def dedup_against(candidates: DataFrame, visited: DataFrame | None,
-                  bloom: "ShardedBloom | Bloom | None" = None,
+                  bloom: ShardedBloom | None = None,
                   hash_col: str = "url_hash") -> DataFrame:
     """Exact not-yet-visited filter with optional bloom fast path.
 
@@ -275,20 +238,14 @@ def dedup_against(candidates: DataFrame, visited: DataFrame | None,
     if visited is None:
         return candidates
     if bloom is None:
-        return candidates.join(F.broadcast(visited.select(hash_col))
-                               if _small(visited) else visited.select(hash_col),
-                               on=hash_col, how="left_anti")
+        return candidates.join(visited.select(hash_col), on=hash_col,
+                               how="left_anti")
     tagged = bloom_prefilter(candidates, bloom, hash_col)
     fresh = tagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
     maybe = tagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
     confirmed = maybe.join(visited.select(hash_col), on=hash_col,
                            how="left_anti")
     return fresh.unionByName(confirmed)
-
-
-def _small(df: DataFrame) -> bool:
-    # visited is typically huge; broadcast only when provably tiny
-    return False
 
 
 def first_occurrence(candidates: DataFrame, hash_col: str = "url_hash",

@@ -17,15 +17,14 @@ Scale shape (r7, VERDICT r6 item 4 + ADVICE): the raw edge input is
 scanned ONCE — the distinct edge set, the degree-annotated edge list and
 the node set (tagged ``has_out`` at build time, so the per-iteration
 dangling mass is a flag-filtered aggregate instead of an anti-join) all
-roll through the on-disk parquet scratch (operators/scratch.py), exactly
-like the DFS and connected-components fixpoints. Each iteration is then
-one equi-join (ranks × edges on src) plus one partial-aggregated
+roll through ``RoundState`` (operators/scratch.py), exactly like the DFS
+and connected-components fixpoints. Each iteration is then one
+equi-join (ranks × edges on src) plus one partial-aggregated
 ``groupBy(dst)`` — hub pages collapse map-side, skew-safe — with the
-round state rolled to scratch: the plan is the SAME SIZE every
-iteration, executor storage stays flat at any iteration count, and the
-post-roll parquet statistics let AQE pick broadcast vs sort-merge
-honestly at either scale. The dangling mass is a one-row aggregate
-cross-joined back (no driver round-trip).
+round state rolled: the plan is the SAME SIZE every iteration, storage
+stays flat at any iteration count, and the materialized statistics let
+AQE pick broadcast vs sort-merge honestly at either scale. The dangling
+mass is a one-row aggregate cross-joined back (no driver round-trip).
 """
 
 from __future__ import annotations
@@ -66,17 +65,14 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     Returns (node, rank_q, rank): ``rank_q`` BIGINT (exact, the oracle
     compares this), ``rank`` = round(rank_q / 10^12, 6) for reading.
     Dangling nodes (no out-edges) spread their mass uniformly. Ranks sum
-    to ~1 (integer division sheds < N*(iterations+1) quanta of 10^-12)."""
-    from roddy_spark.operators.scratch import _LocalRoll, _Scratch
+    to ~1 (integer division sheds < N*(iterations+1) quanta of 10^-12).
 
-    spark = edges.sparkSession
-    # default round-state backend: eager localCheckpoint with unpersist
-    # of the superseded version (flat plan + flat storage, no parquet
-    # commit per round); pass scratch_dir to roll through durable
-    # on-disk parquet instead (round state larger than executor storage;
-    # the caller owns that directory's lifecycle)
-    sc = _Scratch(spark, scratch_dir) if scratch_dir else _LocalRoll()
-    try:
+    Round state is in memory by default; with ``scratch_dir`` (or
+    ``$RODDY_SCRATCH_DIR``) it is durable parquet under a fresh
+    subdirectory that is deleted on return (operators/scratch.py)."""
+    from roddy_spark.operators.scratch import RoundState
+
+    with RoundState(edges.sparkSession, scratch_dir) as sc:
         e = sc.roll(edges.select(F.col(src).alias("src"),
                                  F.col(dst).alias("dst")).distinct(),
                     "edges")  # the only scan of the (possibly huge) input
@@ -90,7 +86,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                     .withColumn("has_out", F.lit(False)))
         # node set and the uniform initial ranks are ONE rolled frame: the
         # node side of each iteration's join re-reads the live ranks
-        # parquet and projects rank_q away (no separate nodes roll)
+        # version and projects rank_q away (no separate nodes roll)
         nodes_all = srcs.unionByName(dst_only)
         n_nodes = nodes_all.count()
 
@@ -108,6 +104,3 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
             "node", "rank_q",
             F.round(F.col("rank_q") / F.lit(float(Q)), 6).alias("rank")) \
             .localCheckpoint(eager=True)
-    finally:
-        if isinstance(sc, _LocalRoll):
-            sc.release()

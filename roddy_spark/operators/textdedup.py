@@ -248,28 +248,22 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     fold map-side, and each improved node then chases one hop through its
     new label's own label (pointer jumping) so star-shaped clusters —
     the LSH-dedup common case — converge in O(log diameter) rounds, not
-    O(diameter). Round state rolls through operators/scratch.py: by
-    default the in-memory roll (eager localCheckpoint, superseded version
-    unpersisted — flat storage, plan truncated every round, no parquet
-    commit latency per round); pass ``scratch_dir`` for the durable
-    on-disk parquet roll when the label frame may exceed executor
-    storage — the 100 TB shape. No collects; the only driver-side signal
-    is the per-round emptiness probe on the (shrinking) delta frame.
+    O(diameter). Round state rolls through ``RoundState``
+    (operators/scratch.py): in memory by default (flat storage, plan
+    truncated every round, no parquet commit latency per round); with
+    ``scratch_dir`` or ``$RODDY_SCRATCH_DIR``, durable parquet under a
+    fresh subdirectory deleted on return — for a label frame that may
+    exceed executor storage, the 100 TB shape. No collects; the only
+    driver-side signal is the per-round emptiness probe on the
+    (shrinking) delta frame.
 
     ``nodes`` (optional, single-column) adds isolated docs — they come out
     as their own singleton cluster. ``stats`` receives
     {"rounds", "delta_rows"}.
     """
-    from roddy_spark.operators.scratch import _LocalRoll, _Scratch
+    from roddy_spark.operators.scratch import RoundState
 
-    spark = pairs.sparkSession
-    # round-state backend: default is the in-memory roll (eager
-    # localCheckpoint + unpersist of the superseded version — flat plan,
-    # flat storage, no parquet commit per round); pass scratch_dir for
-    # the durable on-disk parquet roll when round state may exceed
-    # executor storage (the caller owns that directory's lifecycle)
-    sc = _Scratch(spark, scratch_dir) if scratch_dir else _LocalRoll()
-    try:
+    with RoundState(pairs.sparkSession, scratch_dir) as sc:
         half = pairs.select(F.col(id_a).alias("src"),
                             F.col(id_b).alias("dst"))
         edges = sc.roll(
@@ -321,9 +315,6 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                 break
         return (labels.select("id", F.col("label").alias("cluster_id"))
                 .localCheckpoint(eager=True))
-    finally:
-        if isinstance(sc, _LocalRoll):
-            sc.release()
 
 
 def canonical_docs(df: DataFrame, pairs: DataFrame,

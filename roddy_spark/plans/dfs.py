@@ -34,10 +34,10 @@ from pyspark.sql.types import (ArrayType, IntegerType, StringType,
 from roddy_spark.config import CrawlConfig
 from roddy_spark.fetch import fetch_join
 from roddy_spark.functions import urls as U
-# rolling on-disk round state, shared with the other fixpoints
+# rolling round state, shared with the other fixpoints
 # (operators/scratch.py) — the plan-truncation device the BFS loop gets
 # from its SnapshotStore, applied to iterative self-joins
-from roddy_spark.operators.scratch import _Scratch, scratch_root
+from roddy_spark.operators.scratch import RoundState
 
 _PENDING_SCHEMA = StructType([
     StructField("url_norm", StringType()),
@@ -155,14 +155,12 @@ def dfs_preorder(spark: SparkSession, pages: DataFrame, seeds: list[str],
     ``stats`` (optional dict) receives {"rounds", "delta_rows"} (changed
     URLs per round) for instrumentation/tests.
 
-    Iteration state (paths/changed/edges/fetched_urls) rolls through an
-    on-disk parquet scratch, one live version per frame (``_Scratch``) —
-    bounded disk, flat executor storage memory at any round count."""
-    import shutil
-
-    root = scratch_dir or scratch_root(spark, "roddy_dfs_")
-    sc = _Scratch(spark, root)
-    try:
+    Iteration state (paths/changed/edges/fetched_urls) rolls through
+    ``RoundState``, one live version per frame — flat storage at any
+    round count. It is in memory by default; with ``scratch_dir`` (or
+    ``$RODDY_SCRATCH_DIR``) it is durable parquet under a fresh
+    subdirectory that is deleted on return."""
+    with RoundState(spark, scratch_dir) as sc:
         seed_rows = [(u, [i]) for i, u in enumerate(seeds)]
         seeds_df = (spark.createDataFrame(seed_rows, ["raw_url", "path"])
                     .withColumn("url_norm", U.canonicalize("raw_url"))
@@ -236,11 +234,8 @@ def dfs_preorder(spark: SparkSession, pages: DataFrame, seeds: list[str],
                                                 release_rank_caches)
         out = (ordered_seq(paths, ["path"], "seq")
                .select("url_norm", F.size("path").alias("depth"), "seq"))
-        # the ONE checkpoint left: detach the result from the scratch files
-        # deleted below (bounded — it is the final output, not round state)
+        # the result's own checkpoint: detach it from the round state
+        # released below (bounded — it is the final output, not round state)
         out = out.localCheckpoint(eager=True)
         release_rank_caches()
         return out
-    finally:
-        if scratch_dir is None:
-            shutil.rmtree(root, ignore_errors=True)

@@ -28,6 +28,12 @@ Every stage is the operator the contract oracles verify
 composes them; scale shapes are the operators' own (banded equi-joins,
 semi-naive components, zero-shuffle repetition scan, broadcast
 decontamination).
+
+Connected components keeps its round state in executor memory by
+default. On a cluster, set ``RODDY_SCRATCH_DIR`` in the driver's
+environment to shared storage (HDFS/object store) to make that state
+durable parquet instead; the run's subdirectory there is deleted when
+the components are done.
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from roddy_spark.operators.dedup import Bloom, ShardedBloom, bloom_from_hashes_df
+from roddy_spark.operators.dedup import Bloom, ShardedBloom
 
 
 def test_bloom_no_false_negatives_low_fp():
@@ -60,16 +60,6 @@ def test_sharded_bloom_non_power_of_two_negative_hashes(spark):
         local = ShardedBloom(capacity=1 << 13, fpp=0.01, n_shards=n_shards)
         local.add(hashes)
         assert local.might_contain(hashes).all()
-
-
-def test_distributed_build_equals_local(spark):
-    hashes = list(range(-500, 500, 3))
-    df = spark.createDataFrame([(h,) for h in hashes], ["url_hash"]) \
-              .repartition(6)
-    dist = bloom_from_hashes_df(df, capacity=4096, fpp=0.01)
-    local = Bloom(4096, 0.01)
-    local.add(np.asarray(hashes, dtype=np.int64))
-    assert np.array_equal(dist.bits, local.bits)  # bit-identical
 
 
 def test_shard_sizing_constant_driver_memory_at_1e9():

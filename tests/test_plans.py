@@ -275,10 +275,10 @@ def test_pagerank_iteration_partial_agg(spark):
 
 
 def test_pagerank_round_state_flat(spark):
-    """PageRank round state rolls through the on-disk scratch (VERDICT
-    r6 item 4): the returned plan is the same size at any iteration
-    count (no lineage growth) and executor storage holds at most the
-    single final-output checkpoint — never one pinned set per
+    """PageRank round state rolls through RoundState's in-memory default
+    (VERDICT r6 item 4): the returned plan is the same size at any
+    iteration count (no lineage growth) and executor storage holds at
+    most the single final-output checkpoint — never one pinned set per
     iteration."""
     from roddy_spark.operators.linkgraph import pagerank
     edges = spark.createDataFrame(
