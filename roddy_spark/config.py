@@ -47,19 +47,15 @@ class CrawlConfig:
     user_agent: str = "roddy-spark/0.1"
     # scale knobs
     salt_buckets: int = 8              # skew salt for repartition-by-host (D6)
-    bloom_capacity: int = 1 << 20      # expected visited-set size for the bloom prefilter
-    bloom_fpp: float = 0.01
-    # 'auto': enable the broadcast-bloom prefilter once the visited set
-    # exceeds bloom_min_visited (below that the exact anti-join is cheaper
-    # than maintaining the filter); 'on'/'off' force it
+    # visited-set bloom prefilter (operators/dedup.py ShardedBloom): the
+    # expected visited-set size sizes the filter and its shard count (each
+    # shard bitmap ≤ ShardedBloom.DEFAULT_MAX_SHARD_BYTES, so a 10^9-key
+    # filter splits into ~10 shards). 'auto' enables it once the visited
+    # set reaches dedup.BLOOM_MIN_VISITED (below that the exact anti-join
+    # is cheaper than maintaining the filter); 'on'/'off' force it. The
+    # false-positive target is the dedup.BLOOM_FPP constant.
+    bloom_capacity: int = 1 << 20
     bloom_mode: str = "auto"
-    bloom_min_visited: int = 50_000
-    # per-shard bitmap budget for the sharded visited filter: shard count =
-    # ceil(total_filter_bytes / this). At the default 128 MiB a 10^9-key
-    # filter splits into ~10 shards, each built/merged independently with
-    # constant driver memory (operators/dedup.py ShardedBloom). Tests force
-    # multi-shard behavior in-sandbox by shrinking this.
-    bloom_max_shard_bytes: int = 128 << 20
     # visited-table layout: 0 = plain per-batch parquet; K > 0 = a bucketed
     # table CLUSTERED BY pmod(url_hash) INTO K buckets (Iceberg bucket-
     # transform stand-in), so the per-batch anti-join never shuffles the
@@ -75,6 +71,9 @@ class CrawlConfig:
         for name in ("max_depth", "max_requests", "max_responses", "per_host_budget"):
             if getattr(self, name) < 0:
                 raise ValueError(f"{name} must be >= 0 (0 means unlimited)")
+        if self.bloom_mode not in ("auto", "on", "off"):
+            raise ValueError(f"bloom_mode must be 'auto', 'on' or 'off', "
+                             f"not {self.bloom_mode!r}")
         # tuples keep the config hashable/broadcastable
         for name in ("allowed_domains", "disallowed_domains", "url_filters",
                      "disallowed_url_filters"):

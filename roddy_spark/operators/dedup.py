@@ -35,178 +35,180 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 
-class Bloom:
-    """Vectorized numpy bloom filter over int64 hashes.
-
-    Double hashing (Kirsch–Mitzenmacher): index_i = h1 + i*h2 (mod m),
-    with h1/h2 derived from the already-well-mixed xxhash64 key.
-    """
-
-    def __init__(self, capacity: int, fpp: float = 0.01):
-        bits = max(64, int(-capacity * np.log(fpp) / (np.log(2) ** 2)))
-        self.m = 1 << int(np.ceil(np.log2(bits)))  # power of two
-        self.k = max(1, int(round((self.m / max(capacity, 1)) * np.log(2))))
-        self.k = min(self.k, 16)
-        self.bits = np.zeros(self.m // 8, dtype=np.uint8)
-
-    def _indices(self, hashes: np.ndarray) -> np.ndarray:
-        h = hashes.astype(np.uint64)
-        h1 = h & np.uint64(self.m - 1)
-        h2 = ((h >> np.uint64(33)) | np.uint64(1))
-        i = np.arange(self.k, dtype=np.uint64)[:, None]
-        return (h1 + i * h2) & np.uint64(self.m - 1)  # (k, n)
-
-    def add(self, hashes: np.ndarray) -> None:
-        if len(hashes) == 0:
-            return
-        idx = self._indices(np.asarray(hashes, dtype=np.int64)).ravel()
-        np.bitwise_or.at(self.bits, (idx >> 3).astype(np.int64),
-                         (1 << (idx & 7)).astype(np.uint8))
-
-    def might_contain(self, hashes: np.ndarray) -> np.ndarray:
-        if len(hashes) == 0:
-            return np.zeros(0, dtype=bool)
-        idx = self._indices(np.asarray(hashes, dtype=np.int64))  # (k, n)
-        bytes_ = self.bits[(idx >> 3).astype(np.int64)]
-        bits = (bytes_ >> (idx & np.uint64(7)).astype(np.uint8)) & 1
-        return bits.all(axis=0)
-
-    def merge(self, other: "Bloom") -> None:
-        """Delta merge (bitwise OR) — the per-micro-batch merge step."""
-        if other.m != self.m or other.k != self.k:
-            raise ValueError("bloom shape mismatch")
-        np.bitwise_or(self.bits, other.bits, out=self.bits)
+# Visited-filter constants (single-valued in every deployment, so not
+# CrawlConfig fields): false-positive target, the visited size at which
+# bloom_mode='auto' turns the filter on (below it the exact anti-join is
+# cheaper than maintaining the filter), and the cap on the per-batch hash
+# delta the driver materializes for a merge. Only the admitted COUNT rides
+# the visited write as an Observation metric — a sliced collect_list would
+# NOT bound transfer, because slice() is a result expression applied AFTER
+# CollectMetrics aggregation: every task still ships its full partial
+# buffer (ADVICE r5). An in-cap delta instead pays one column-pruned
+# collect (url_hash only, ≤ cap × 8 B); an over-cap delta never moves
+# hashes to the driver — it takes the distributed per-shard bitmap build,
+# whose driver footprint is one shard bitmap regardless of batch size.
+BLOOM_FPP = 0.01
+BLOOM_MIN_VISITED = 50_000
+MAX_DELTA_HASHES = 1_000_000
 
 
 class ShardedBloom:
-    """Bloom sharded by pmod(hash, n_shards) — the 10^10-scale layout: each
-    shard stays bounded (≤ ``max_shard_bytes``), shards are built and
-    delta-merged independently, and the driver-side merge touches ONE shard
-    bitmap at a time (constant memory per merge step regardless of total
-    filter size)."""
+    """Bloom filter over int64 hashes, sharded by pmod(hash, n_shards) —
+    the 10^10-scale layout: one ``(n_shards, m/8)`` uint8 bitmap whose
+    rows stay bounded (≤ ``DEFAULT_MAX_SHARD_BYTES``), so the distributed
+    build ships and ORs one shard row at a time on the driver (constant
+    memory per merge step regardless of total filter size).
+
+    Within a shard, double hashing (Kirsch–Mitzenmacher): index_i =
+    h1 + i*h2 (mod m), with h1/h2 derived from the already-well-mixed
+    xxhash64 key. A one-shard filter is a plain bloom filter."""
 
     DEFAULT_MAX_SHARD_BYTES = 128 << 20
 
     @staticmethod
-    def shards_for(capacity: int, fpp: float = 0.01,
-                   max_shard_bytes: int | None = None) -> int:
+    def _shape(capacity: int, fpp: float) -> tuple[int, int]:
+        """(bits per shard m — a power of two, hash count k)."""
+        bits = max(64, int(-capacity * np.log(fpp) / (np.log(2) ** 2)))
+        m = 1 << int(np.ceil(np.log2(bits)))
+        k = int(round(m / max(capacity, 1) * np.log(2)))
+        return m, min(16, max(1, k))
+
+    @classmethod
+    def shards_for(cls, capacity: int, fpp: float = BLOOM_FPP) -> int:
         """Shard count so each shard's bitmap stays under the byte budget
         (10^9 keys @ 1% fpp ≈ 1.2 GiB total → 10 shards at 128 MiB)."""
-        max_b = max_shard_bytes or ShardedBloom.DEFAULT_MAX_SHARD_BYTES
-        total_bytes = Bloom(max(capacity, 1), fpp).m // 8
-        return max(1, -(-total_bytes // max_b))
+        total_bytes = cls._shape(max(capacity, 1), fpp)[0] // 8
+        return max(1, -(-total_bytes // cls.DEFAULT_MAX_SHARD_BYTES))
 
-    def __init__(self, capacity: int, fpp: float = 0.01,
-                 n_shards: int | None = None,
-                 max_shard_bytes: int | None = None):
+    def __init__(self, capacity: int, fpp: float = BLOOM_FPP,
+                 n_shards: int | None = None):
         if n_shards is None:
-            n_shards = self.shards_for(capacity, fpp, max_shard_bytes)
+            n_shards = self.shards_for(capacity, fpp)
         self.n_shards = max(1, n_shards)
-        per = max(1024, capacity // self.n_shards)
-        self.shards = [Bloom(per, fpp) for _ in range(self.n_shards)]
+        self.m, self.k = self._shape(
+            max(1024, capacity // self.n_shards), fpp)
+        self.bits = np.zeros((self.n_shards, self.m // 8), dtype=np.uint8)
 
-    def merge(self, other: "ShardedBloom") -> None:
-        """Delta merge, shard-wise (one bitmap OR at a time)."""
-        if other.n_shards != self.n_shards:
-            raise ValueError("shard count mismatch")
-        for mine, theirs in zip(self.shards, other.shards):
-            mine.merge(theirs)
-
-    def _split(self, hashes: np.ndarray) -> np.ndarray:
-        # Signed floor-mod (numpy int64 % positive n is non-negative) so the
-        # lookup shard matches Spark's pmod(hash, n) used by the distributed
-        # build; uint64 % n diverges for negative hashes whenever n is not a
-        # power of two, which made ~half the visited set bloom-NEGATIVE
-        # (silent re-crawl) with e.g. 10 shards (ADVICE r2).
-        return (hashes.astype(np.int64) % np.int64(self.n_shards)).astype(int)
+    def _probe(self, hashes) -> tuple[np.ndarray, np.ndarray]:
+        """(byte offset, bit) of each key's k probes, both shaped (k, n),
+        in the flattened bitmap. The shard is a signed floor-mod (numpy
+        int64 % positive n is non-negative) so it matches Spark's
+        pmod(hash, n) used by the distributed build; uint64 % n diverges
+        for negative hashes whenever n is not a power of two, which made
+        ~half the visited set bloom-NEGATIVE (silent re-crawl) with e.g.
+        10 shards (ADVICE r2)."""
+        h = np.asarray(hashes, dtype=np.int64)
+        shard = (h % np.int64(self.n_shards)).astype(np.uint64)
+        u, mask = h.astype(np.uint64), np.uint64(self.m - 1)
+        h2 = (u >> np.uint64(33)) | np.uint64(1)
+        i = np.arange(self.k, dtype=np.uint64)[:, None]
+        pos = shard * np.uint64(self.m) + (((u & mask) + i * h2) & mask)
+        return (pos >> np.uint64(3)).astype(np.int64), \
+            (pos & np.uint64(7)).astype(np.uint8)
 
     def add(self, hashes: np.ndarray) -> None:
-        hashes = np.asarray(hashes, dtype=np.int64)
-        sh = self._split(hashes)
-        for s in range(self.n_shards):
-            self.shards[s].add(hashes[sh == s])
+        if len(hashes) == 0:
+            return
+        byte, bit = self._probe(hashes)
+        np.bitwise_or.at(self.bits.reshape(-1), byte.ravel(),
+                         (np.uint8(1) << bit).ravel())
 
     def might_contain(self, hashes: np.ndarray) -> np.ndarray:
-        hashes = np.asarray(hashes, dtype=np.int64)
-        out = np.zeros(len(hashes), dtype=bool)
-        sh = self._split(hashes)
-        for s in range(self.n_shards):
-            mask = sh == s
-            if mask.any():
-                out[mask] = self.shards[s].might_contain(hashes[mask])
-        return out
+        if len(hashes) == 0:
+            return np.zeros(0, dtype=bool)
+        byte, bit = self._probe(hashes)
+        return ((self.bits.reshape(-1)[byte] >> bit) & 1).all(axis=0)
+
+    def merge(self, other: "ShardedBloom") -> None:
+        """Delta merge (bitwise OR) — the per-micro-batch merge step."""
+        if (other.n_shards, other.m, other.k) != \
+                (self.n_shards, self.m, self.k):
+            raise ValueError("bloom shape mismatch")
+        np.bitwise_or(self.bits, other.bits, out=self.bits)
 
 
 def sharded_bloom_from_hashes_df(df: DataFrame, capacity: int,
-                                 fpp: float = 0.01,
+                                 fpp: float = BLOOM_FPP,
                                  n_shards: int | None = None,
-                                 max_shard_bytes: int | None = None,
                                  hash_col: str = "url_hash") -> ShardedBloom:
     """Distributed ShardedBloom build. Rows are repartitioned by
     ``pmod(hash, n_shards)`` so every shard's keys land in ONE partition;
-    each partition emits (shard, bitmap) rows for the shards it owns, and
-    the driver ORs them ONE AT A TIME via ``toLocalIterator`` — peak driver
-    memory = the assembled filter + a single shard bitmap, and total driver
-    traffic = n_shards × shard_bytes = the filter size, independent of row
-    count, which keeps the build valid at 10^10 rows."""
-    proto = ShardedBloom(capacity, fpp, n_shards, max_shard_bytes)
+    each partition fills a one-shard filter per shard it owns and emits
+    (shard, bitmap) rows, and the driver ORs them ONE AT A TIME into the
+    filter's shard rows — peak driver memory = the assembled filter + a
+    single shard bitmap, and total driver traffic = n_shards × shard_bytes
+    = the filter size, independent of row count, which keeps the build
+    valid at 10^10 rows."""
+    proto = ShardedBloom(capacity, fpp, n_shards)
     k_shards = proto.n_shards
-    m, k = proto.shards[0].m, proto.shards[0].k
+    # a one-shard filter over capacity // k_shards has the shard's (m, k)
+    per_shard = capacity // k_shards
 
     shard = F.pmod(F.col(hash_col), F.lit(k_shards)).cast("int")
     rep = (df.select(F.col(hash_col), shard.alias("__shard"))
              .repartition(k_shards, "__shard"))
 
     def build(batches):
-        local: dict[int, np.ndarray] = {}
+        local: dict[int, ShardedBloom] = {}
         for pdf in batches:
             for s, grp in pdf.groupby("__shard"):
-                bits = local.get(int(s))
-                if bits is None:
-                    bits = local.setdefault(int(s),
-                                            np.zeros(m // 8, dtype=np.uint8))
-                b = Bloom.__new__(Bloom)
-                b.m, b.k, b.bits = m, k, bits
+                b = local.get(int(s))
+                if b is None:
+                    b = local[int(s)] = ShardedBloom(per_shard, fpp, 1)
                 b.add(grp[hash_col].to_numpy(dtype=np.int64))
-        for s, bits in local.items():
-            yield pd.DataFrame({"shard": [s], "bits": [bits.tobytes()]})
+        for s, b in local.items():
+            yield pd.DataFrame({"shard": [s], "bits": [b.bits.tobytes()]})
 
     built = rep.mapInPandas(build, "shard int, bits binary")
     # small filters: one collect (one job). Large filters: toLocalIterator
     # streams shard bitmaps one at a time — constant driver memory, at the
     # cost of a job per partition batch (only worth it when the filter
     # itself is driver-memory-significant).
-    rows = (built.collect() if k_shards * (m // 8) <= (64 << 20)
+    rows = (built.collect() if proto.bits.nbytes <= (64 << 20)
             else built.toLocalIterator())
     for row in rows:
-        np.bitwise_or(proto.shards[row["shard"]].bits,
+        s = row["shard"]
+        np.bitwise_or(proto.bits[s],
                       np.frombuffer(row["bits"], dtype=np.uint8),
-                      out=proto.shards[row["shard"]].bits)
+                      out=proto.bits[s])
     return proto
 
 
-def bloom_active(config, visited_count: int) -> bool:
-    """One place for the filter-activation policy (bloom_mode on/off/auto
-    with the auto threshold) — shared by the batch Crawler and the
-    streaming FrontierIngest so the two paths can never gate differently.
-    """
-    if config.bloom_mode == "on":
-        return True
-    if config.bloom_mode == "off":
-        return False
-    return visited_count >= config.bloom_min_visited
-
-
 def build_visited_bloom(config, visited: DataFrame | None) -> ShardedBloom:
-    """One place for filter construction (shard sizing from bloom_capacity
-    / bloom_max_shard_bytes; distributed build when a visited table
-    exists, empty filter otherwise) — shared by both intake paths."""
+    """Filter construction: shard count from ``bloom_capacity``; the
+    distributed build when a visited table exists, empty otherwise."""
     if visited is None:
-        return ShardedBloom(config.bloom_capacity, config.bloom_fpp,
-                            max_shard_bytes=config.bloom_max_shard_bytes)
-    return sharded_bloom_from_hashes_df(
-        visited, config.bloom_capacity, config.bloom_fpp,
-        max_shard_bytes=config.bloom_max_shard_bytes)
+        return ShardedBloom(config.bloom_capacity)
+    return sharded_bloom_from_hashes_df(visited, config.bloom_capacity)
+
+
+def refresh_visited_bloom(config, bloom: ShardedBloom | None,
+                          admitted_total: int, read_visited,
+                          delta=None, n_new: int = 0) -> ShardedBloom | None:
+    """The visited filter's whole lifecycle, shared by the batch Crawler
+    and the streaming FrontierIngest so the two can never diverge.
+
+    Without a live filter: build one when ``bloom_mode`` makes it active
+    ('on', or 'auto' once ``admitted_total`` reaches BLOOM_MIN_VISITED) —
+    empty on a fresh store, else rebuilt from ``read_visited()``. With a
+    live filter: OR in the ``n_new`` hashes of ``delta()`` (the rows just
+    admitted), routed by that count against MAX_DELTA_HASHES. Both sources
+    are zero-argument callables returning a DataFrame, so nothing is read
+    unless it is used. Returns the filter, or None while inactive."""
+    if bloom is None:
+        if config.bloom_mode == "off" or (
+                config.bloom_mode == "auto"
+                and admitted_total < BLOOM_MIN_VISITED):
+            return None
+        return build_visited_bloom(
+            config, read_visited() if admitted_total else None)
+    if n_new > MAX_DELTA_HASHES:
+        bloom.merge(sharded_bloom_from_hashes_df(
+            delta(), config.bloom_capacity, n_shards=bloom.n_shards))
+    elif n_new:
+        rows = delta().select("url_hash").collect()
+        bloom.add(np.asarray([r[0] for r in rows], dtype=np.int64))
+    return bloom
 
 
 def bloom_prefilter(candidates: DataFrame, bloom: ShardedBloom,

@@ -187,7 +187,7 @@ def lm_crossentropy(docs: DataFrame, ref: DataFrame,
     ssum = _fold_udf(docs.sparkSession, table, default)
 
     toks = T.tokens(text_col)
-    n_tok = F.size(toks)
+    n_tok = F.coalesce(F.size(toks), F.lit(0))  # null text: 0 tokens
     out = docs.select(
         F.col(id_col), n_tok.cast("long").alias("n_tokens"),
         F.round(F.when(n_tok > 0, ssum(toks) / n_tok).otherwise(F.lit(0.0)),
@@ -249,7 +249,7 @@ def nb_quality_score(docs: DataFrame, good_ref: DataFrame,
     ssum = _fold_udf(docs.sparkSession, table, default)
 
     toks = T.tokens(text_col)
-    n_tok = F.size(toks)
+    n_tok = F.coalesce(F.size(toks), F.lit(0))  # null text: 0 tokens
     out = docs.select(
         F.col(id_col), n_tok.cast("long").alias("n_tokens"),
         F.round(F.when(n_tok > 0, ssum(toks) / n_tok).otherwise(F.lit(0.0)),

@@ -42,24 +42,12 @@ from roddy_spark.extract import parse_html_udf
 from roddy_spark.fetch import fetch_join
 from roddy_spark.functions import urls as U
 from roddy_spark.operators.admission import admit
-from roddy_spark.operators.dedup import ShardedBloom
+from roddy_spark.operators.dedup import refresh_visited_bloom
 from roddy_spark.operators.politeness import politeness_split
 from roddy_spark.operators.rank import release_rank_caches
 
 PRIORITY_PAGING = 0
 PRIORITY_CHILD = 1
-
-# Cap on the per-batch url_hash delta the driver materializes for the
-# visited-bloom merge. Only the admitted COUNT rides the visited write as
-# an Observation metric — a sliced collect_list would NOT bound transfer,
-# because slice() is a result expression applied AFTER CollectMetrics
-# aggregation: each task still ships its full partial buffer (ADVICE r5).
-# In-cap batches pay one bounded column-pruned collect over the
-# just-written snapshot (≤ cap × 8 B); over-cap batches take the
-# distributed per-shard bitmap build, whose driver footprint is one shard
-# bitmap regardless of batch size. Cookie write-back needs no cap at all:
-# the grouped-collect is bounded by the distinct-host count.
-MAX_BLOOM_DELTA_HASHES = 1_000_000
 
 # Hook detach semantics (reference: roddy.go:404-422 On*Detach +
 # callback_options.go wrapper hooks): a registered hook can UNREGISTER
@@ -214,15 +202,15 @@ class SnapshotStore:
             p = os.path.join(d, e)
             if not e.endswith(".parquet") and not e.startswith("part-"):
                 continue
-            try:
-                md = pq.ParquetFile(p).metadata
-                cols = {md.schema.column(i).name: i
-                        for i in range(md.num_columns)}
-                stats = md.row_group(0).column(cols["batch"]).statistics
-                if stats is not None and stats.min > completed:
-                    os.remove(p)
-            except Exception:
+            # an unreadable file raises: skipping it could keep rows of an
+            # uncommitted batch. A file with no row groups holds no rows.
+            md = pq.ParquetFile(p).metadata
+            if md.num_row_groups == 0:
                 continue
+            col = md.schema.names.index("batch")
+            stats = md.row_group(0).column(col).statistics
+            if stats is not None and stats.min > completed:
+                os.remove(p)
 
     def read_visited(self, spark: SparkSession,
                      batch: int | None = None) -> DataFrame | None:
@@ -249,9 +237,11 @@ class SnapshotStore:
              batch: int | None = None) -> DataFrame | None:
         # ``batch`` is stored as a REGULAR column where needed; the
         # directory layout is only for snapshot isolation, so reads go
-        # through an explicit glob (no partition-column inference). The
-        # existence check avoids Spark's noisy WARN+stacktrace probe on
-        # globs that match nothing (e.g. first-batch reads).
+        # through an explicit glob (no partition-column inference). None
+        # means the snapshot does not exist (the existence check also
+        # avoids Spark's noisy WARN+stacktrace probe on globs that match
+        # nothing, e.g. first-batch reads); a snapshot that exists but
+        # cannot be read raises rather than passing for an empty table.
         root = self.path(table)
         if batch is not None:
             paths = [self.path(table, batch)]
@@ -267,10 +257,7 @@ class SnapshotStore:
                            if e.startswith("batch="))
             if not paths:
                 return None
-        try:
-            return spark.read.parquet(*paths)
-        except Exception:
-            return None
+        return spark.read.parquet(*paths)
 
     def rollback_table(self, table: str, completed: int) -> None:
         """Delete ``table`` snapshots written by batches > ``completed`` —
@@ -534,16 +521,6 @@ class Crawler:
                   .select("url_norm", "depth", "priority", "parent_seq",
                           "pos", "ctx"))
 
-    def _build_bloom(self, visited: DataFrame | None) -> ShardedBloom:
-        """Sharded visited filter: shard count derives from bloom_capacity
-        (ceil(filter_bytes / bloom_max_shard_bytes)), so at 10^10-key
-        capacity every shard stays bounded and the distributed build merges
-        one shard bitmap at a time on the driver (constant memory).
-        Construction policy shared with the streaming intake
-        (operators.dedup.build_visited_bloom)."""
-        from roddy_spark.operators.dedup import build_visited_bloom
-        return build_visited_bloom(self.config, visited)
-
     # -- main loop ------------------------------------------------------
     def run(self, seeds: list[str] | None = None,
             resume: bool = False) -> CrawlState:
@@ -596,8 +573,6 @@ class Crawler:
                     pending_bytes = int(pending.select(
                         _row_bytes_agg(pending).alias("b")).first()["b"] or 0
                         ) + 32 * n_pending
-            bloom = (self._build_bloom(visited)
-                     if self._bloom_active(admitted_count) else None)
         else:
             if seeds is None:
                 raise ValueError("seeds required for a fresh crawl")
@@ -618,13 +593,14 @@ class Crawler:
             n_pending = 0
             pending_bytes = 0
             visited = None
-            bloom = (self._build_bloom(None)
-                     if self._bloom_active(0) else None)
             store.commit_manifest({
                 "completed_batch": 0, "admitted_count": 0,
                 "success_count": 0, "batches": [], "done": False,
                 "next_candidates": n_cand, "pending_n": 0,
                 "pending_bytes": 0, "config": repr(cfg)})
+        # visited filter: empty on a fresh store, rebuilt on resume
+        bloom = refresh_visited_bloom(cfg, None, admitted_count,
+                                      lambda: visited)
 
         while batch < self.max_batches:
             batch += 1
@@ -652,29 +628,13 @@ class Crawler:
                 n_admitted = int(obs_adm.get["n"])
                 adm_bytes = int(obs_adm.get["bytes"] or 0) + 32 * n_admitted
                 admitted_count += n_admitted
-                if bloom is None and self._bloom_active(admitted_count):
-                    bloom = self._build_bloom(store.read_visited(spark))
-                elif bloom is not None and n_admitted:
-                    # per-micro-batch delta merge (north rule's cuckoo/
-                    # bloom delta-merge), routed by the COUNT that rode the
-                    # write. An Observation collect_list — even sliced —
-                    # would ship every task's full partial buffer before
-                    # the slice (ADVICE r5), so in-cap batches instead pay
-                    # one bounded column-pruned job over the just-written
-                    # snapshot (url_hash only, ≤ cap × 8 B), and over-cap
-                    # batches never move hashes to the driver at all —
-                    # distributed per-shard bitmap build + shard-wise OR.
-                    if n_admitted > MAX_BLOOM_DELTA_HASHES:
-                        from roddy_spark.operators.dedup import \
-                            sharded_bloom_from_hashes_df
-                        bloom.merge(sharded_bloom_from_hashes_df(
-                            admitted, cfg.bloom_capacity, cfg.bloom_fpp,
-                            n_shards=bloom.n_shards))
-                    else:
-                        import numpy as np
-                        rows = admitted.select("url_hash").collect()
-                        bloom.add(np.asarray([r[0] for r in rows],
-                                             dtype=np.int64))
+                # per-micro-batch delta merge of the read-back rows, routed
+                # by the COUNT that rode the write (or the first build, once
+                # bloom_mode='auto' activates the filter)
+                bloom = refresh_visited_bloom(
+                    cfg, bloom, admitted_count,
+                    lambda: store.read_visited(spark), lambda: admitted,
+                    n_admitted)
             else:
                 admitted = _empty_visited(spark)
                 n_admitted = 0
@@ -899,10 +859,6 @@ class Crawler:
         if getattr(hook, "_rs_detach", False):
             setattr(self, slot, None)
         return out
-
-    def _bloom_active(self, visited_count: int) -> bool:
-        from roddy_spark.operators.dedup import bloom_active
-        return bloom_active(self.config, visited_count)
 
     def _width(self, rows: int, rows_per_partition: int = 20_000) -> int:
         """Partition count sized to the data, capped at cluster width.

@@ -24,16 +24,18 @@ tests/test_streaming_frontier.py). The earlier design ranked by
 ``monotonically_increasing_id`` — partition-layout-dependent, exactly what
 SURVEY.md §7.4.2 forbids.
 
-Scale path (VERDICT r2/r3, ADVICE r5): the intake holds the same
-delta-merged ``ShardedBloom`` the batch loop carries — bloom-negative
-candidates skip the exact anti-join against the full visited store — and
-the per-epoch admitted count rides on the visited write as an
-``Observation`` metric (no separate count job). The bloom's hash delta is
-then fetched by a count-routed bounded job: in-cap epochs collect only the
-url_hash column of the just-written batch (≤ cap × 8 B); over-cap epochs
-use the distributed per-shard bitmap build. At 10^10 visited rows with
-frequent small intake batches, counts and deltas were the intake's cost
-center.
+Scale path (VERDICT r2/r3, ADVICE r5): the intake holds the same visited
+``ShardedBloom`` as the batch loop, through the same lifecycle function
+(``operators.dedup.refresh_visited_bloom``): bloom-negative candidates skip
+the exact anti-join against the full visited store; the filter is built
+when ``bloom_mode`` activates it (rebuilt from the store on resume); and
+each epoch's admissions are delta-merged. The per-epoch admitted count
+rides on the visited write as an ``Observation`` metric (no separate count
+job) and routes the merge: a live filter reads the just-written batch
+back, then collects its url_hash column when the count is in cap, or runs
+the distributed per-shard bitmap build when it is not. At 10^10 visited
+rows with frequent small intake batches, counts and deltas were the
+intake's cost center.
 
 Reference analog: roddy's queue wake-on-add loop (queue/queue.go:140-189)
 — items added while the crawl runs are picked up continuously; here the
@@ -52,8 +54,8 @@ from pyspark.sql.types import (IntegerType, StringType, StructField,
 from roddy_spark.config import CrawlConfig
 from roddy_spark.functions import urls as U
 from roddy_spark.operators.admission import admit
-from roddy_spark.operators.dedup import (ShardedBloom, bloom_active,
-                                         build_visited_bloom)
+from roddy_spark.operators.dedup import (ShardedBloom,
+                                         refresh_visited_bloom)
 from roddy_spark.operators.rank import release_rank_caches
 from roddy_spark.plans.crawl import SnapshotStore, _empty_visited
 
@@ -68,19 +70,6 @@ INTAKE_SCHEMA = StructType([
 # (priority, source file, in-file row index) — a total order that is a
 # function of the ingested FILES only
 _ORDER_COLS = ("priority", "__src_file", "__src_ridx")
-
-# Cap on the per-epoch hash delta the driver materializes for the bloom
-# merge. Only the COUNT rides the visited write as an Observation metric —
-# a sliced collect_list would NOT bound transfer, because slice() is a
-# result expression applied AFTER CollectMetrics aggregation: every task
-# still ships its full partial buffer and the driver merges the whole
-# delta before the slice runs (ADVICE r5). Instead, an in-cap epoch pays
-# one extra column-pruned job over the just-written batch (url_hash only,
-# ≤ ~8 B × cap ≈ 8 MB collected); an over-cap epoch never moves hashes to
-# the driver at all — it takes the DISTRIBUTED per-shard bitmap build
-# (sharded_bloom_from_hashes_df), whose driver footprint is one shard
-# bitmap regardless of epoch size.
-MAX_EPOCH_HASHES = 1_000_000
 
 
 class FrontierIngest:
@@ -105,23 +94,6 @@ class FrontierIngest:
         self._admitted_total = 0
         self._bloom: ShardedBloom | None = None
 
-    # -- bloom lifecycle: shared policy/construction (operators.dedup) ---
-    def _bloom_active(self, visited_count: int) -> bool:
-        return bloom_active(self.config, visited_count)
-
-    def _build_bloom(self, visited: DataFrame | None) -> ShardedBloom:
-        return build_visited_bloom(self.config, visited)
-
-    def _merge_delta_distributed(self, batch_no: int) -> None:
-        """Oversized-epoch fallback: per-shard bitmap build over the just-
-        written batch, merged shard-wise — driver memory stays one shard
-        bitmap regardless of epoch size (same path the batch loop uses)."""
-        from roddy_spark.operators.dedup import sharded_bloom_from_hashes_df
-        batch_df = self.store.read_visited(self.spark, batch_no)
-        self._bloom.merge(sharded_bloom_from_hashes_df(
-            batch_df, self.config.bloom_capacity, self.config.bloom_fpp,
-            n_shards=self._bloom.n_shards))
-
     def _process_batch(self, raw: DataFrame, epoch_id: int) -> None:
         spark = self.spark
         cand = (raw.withColumn("url_norm", U.canonicalize("raw_url"))
@@ -140,12 +112,8 @@ class FrontierIngest:
                          order_cols=_ORDER_COLS)
         batch_no = int(epoch_id) + 1
         # only the admitted COUNT rides on the write (no separate count
-        # job, and nothing unbounded crosses to the driver — ADVICE r5:
-        # a sliced collect_list metric would still ship every task's full
-        # partial buffer before the slice). The bloom delta-merge then
-        # routes by that count: in-cap epochs fetch the url_hash column
-        # with one bounded column-pruned job over the just-written batch;
-        # over-cap epochs go straight to the distributed per-shard build.
+        # job, and nothing unbounded crosses to the driver); the bloom
+        # delta-merge routes by that count
         obs = Observation(f"intake_{batch_no}")
         self.store.write_visited(
             admitted.observe(obs, F.count(F.lit(1)).alias("n"))
@@ -153,19 +121,10 @@ class FrontierIngest:
         release_rank_caches()
         n = int(obs.get["n"])
         self._admitted_total += n
-        if self._bloom is None and self._bloom_active(self._admitted_total):
-            self._bloom = self._build_bloom(self.store.read_visited(spark))
-        elif self._bloom is not None and n:
-            if n > MAX_EPOCH_HASHES:
-                # oversized epoch: distributed full-delta rebuild over the
-                # just-written batch — no hash list ever reaches the driver
-                self._merge_delta_distributed(batch_no)
-            else:
-                import numpy as np
-                rows = (self.store.read_visited(spark, batch_no)
-                        .select("url_hash").collect())
-                self._bloom.add(np.asarray([r[0] for r in rows],
-                                           dtype=np.int64))
+        self._bloom = refresh_visited_bloom(
+            self.config, self._bloom, self._admitted_total,
+            lambda: self.store.read_visited(spark),
+            lambda: self.store.read_visited(spark, batch_no), n)
         self.store.commit_manifest({
             "completed_batch": batch_no,
             "admitted_count": self._admitted_total,
@@ -180,11 +139,11 @@ class FrontierIngest:
             # a replayed epoch re-appends under the bucketed layout —
             # drop anything the manifest never acknowledged first
             self.store.rollback_visited(m["completed_batch"])
-        if self._bloom is None and self._bloom_active(self._admitted_total):
-            # fresh store → empty filter (bloom_mode=on); resume → rebuild
-            # from the persisted visited hashes, like the batch loop
-            self._bloom = self._build_bloom(
-                self.store.read_visited(self.spark) if m else None)
+        # fresh store → empty filter (bloom_mode=on); resume → rebuild
+        # from the persisted visited hashes, like the batch loop
+        self._bloom = refresh_visited_bloom(
+            self.config, self._bloom, self._admitted_total,
+            lambda: self.store.read_visited(self.spark))
         src = (self.spark.readStream.schema(INTAKE_SCHEMA)
                .parquet(self.intake_dir)
                .select("*",

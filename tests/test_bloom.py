@@ -4,14 +4,14 @@ from __future__ import annotations
 
 import numpy as np
 
-from roddy_spark.operators.dedup import Bloom, ShardedBloom
+from roddy_spark.operators.dedup import ShardedBloom
 
 
 def test_bloom_no_false_negatives_low_fp():
     rng = np.random.default_rng(42)
     added = rng.integers(-(2**62), 2**62, size=20_000, dtype=np.int64)
     other = rng.integers(-(2**62), 2**62, size=20_000, dtype=np.int64)
-    b = Bloom(capacity=20_000, fpp=0.01)
+    b = ShardedBloom(capacity=20_000, fpp=0.01, n_shards=1)
     b.add(added)
     assert b.might_contain(added).all()           # zero false negatives
     fp = b.might_contain(other).mean()
@@ -19,8 +19,8 @@ def test_bloom_no_false_negatives_low_fp():
 
 
 def test_bloom_delta_merge():
-    a = Bloom(1000, 0.01)
-    b = Bloom(1000, 0.01)
+    a = ShardedBloom(1000, 0.01, n_shards=1)
+    b = ShardedBloom(1000, 0.01, n_shards=1)
     xs = np.arange(100, dtype=np.int64)
     ys = np.arange(100, 200, dtype=np.int64)
     a.add(xs)
@@ -56,10 +56,12 @@ def test_sharded_bloom_non_power_of_two_negative_hashes(spark):
         misses = ~built.might_contain(hashes)
         assert not misses.any(), (
             f"{misses.sum()} bloom false negatives with {n_shards} shards")
-        # local add must route identically to the distributed build
+        # local add must route identically to the distributed build, which
+        # fills one one-shard filter per shard: same bits, shard by shard
         local = ShardedBloom(capacity=1 << 13, fpp=0.01, n_shards=n_shards)
         local.add(hashes)
         assert local.might_contain(hashes).all()
+        assert (local.bits == built.bits).all()
 
 
 def test_shard_sizing_constant_driver_memory_at_1e9():
@@ -68,24 +70,24 @@ def test_shard_sizing_constant_driver_memory_at_1e9():
     every delta merge touch ≤128 MiB at a time (VERDICT r1 item 4)."""
     n = ShardedBloom.shards_for(10**9, 0.01)
     assert n >= 8, n
-    per_shard_bytes = Bloom(10**9 // n, 0.01).m // 8
+    per_shard_bytes = ShardedBloom(10**9, 0.01, n_shards=n).m // 8
     assert per_shard_bytes <= ShardedBloom.DEFAULT_MAX_SHARD_BYTES
     # small capacities stay single-shard (no pointless splitting)
     assert ShardedBloom.shards_for(1 << 20, 0.01) == 1
 
 
-def test_sharded_distributed_build_and_delta_merge(spark):
+def test_sharded_distributed_build_and_delta_merge(spark, monkeypatch):
     """sharded_bloom_from_hashes_df == local ShardedBloom membership, and
     shard-wise delta merge unions batches (the crawl loop's per-micro-batch
-    path with a forced multi-shard layout)."""
+    path with a forced multi-shard layout: a tiny shard byte budget)."""
     from pyspark.sql import functions as F
 
     from roddy_spark.operators.dedup import sharded_bloom_from_hashes_df
 
+    monkeypatch.setattr(ShardedBloom, "DEFAULT_MAX_SHARD_BYTES", 1 << 10)
     df1 = spark.range(0, 5000).select(F.xxhash64("id").alias("url_hash"))
     df2 = spark.range(5000, 9000).select(F.xxhash64("id").alias("url_hash"))
-    built = sharded_bloom_from_hashes_df(df1, capacity=1 << 14, fpp=0.01,
-                                         max_shard_bytes=1 << 10)
+    built = sharded_bloom_from_hashes_df(df1, capacity=1 << 14, fpp=0.01)
     assert built.n_shards > 1, "test must exercise the multi-shard path"
     delta = sharded_bloom_from_hashes_df(df2, capacity=1 << 14, fpp=0.01,
                                          n_shards=built.n_shards)

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from roddy_spark.config import CrawlConfig
+from roddy_spark.operators.dedup import ShardedBloom
 from roddy_spark.oracle import crawl_oracle, pages_dict_from_pandas
 from roddy_spark.plans.crawl import Crawler
 from roddy_spark.robots import build_robots_map
@@ -45,11 +46,11 @@ CONFIGS = {
     "bucketed_visited": (CrawlConfig(max_depth=3, per_host_budget=3,
                                      visited_buckets=8),
                          default_seeds(WEB)),
-    # tiny shard budget → the visited filter is genuinely multi-sharded
-    # in-sandbox (ShardedBloom with >1 shard, delta-merged per batch)
+    # with the tiny shard budget set in test_spark_matches_oracle, the
+    # visited filter is genuinely multi-sharded at test scale
+    # (ShardedBloom with >1 shard, delta-merged per batch)
     "bloom_forced": (CrawlConfig(max_depth=3, bloom_mode="on",
-                                 bloom_capacity=1 << 16,
-                                 bloom_max_shard_bytes=1 << 14),
+                                 bloom_capacity=1 << 16),
                      ["http://h0.test/"]),
 }
 
@@ -66,9 +67,13 @@ def web_fixture(spark):
 
 
 @pytest.mark.parametrize("name", list(CONFIGS))
-def test_spark_matches_oracle(spark, web_fixture, tmp_path, name):
+def test_spark_matches_oracle(spark, web_fixture, tmp_path, name,
+                              monkeypatch):
     pages_dict, pages_df, robots = web_fixture
     config, seeds = CONFIGS[name]
+    if name == "bloom_forced":
+        monkeypatch.setattr(ShardedBloom, "DEFAULT_MAX_SHARD_BYTES", 1 << 14)
+        assert ShardedBloom.shards_for(config.bloom_capacity) > 1
     robots_rows = list(zip(robots_pandas(WEB)["host"],
                            robots_pandas(WEB)["robots_txt"]))
     expected = crawl_oracle(pages_dict, seeds, config,
@@ -105,19 +110,26 @@ def test_spark_matches_oracle(spark, web_fixture, tmp_path, name):
         assert over == 0
 
 
+def test_bloom_mode_rejects_unknown_value():
+    """A typo such as 'of' must not silently mean 'auto'."""
+    for mode in ("auto", "on", "off"):
+        CrawlConfig(bloom_mode=mode)
+    with pytest.raises(ValueError, match="bloom_mode"):
+        CrawlConfig(bloom_mode="of")
+
+
 def test_batch_overcap_bloom_delta_uses_distributed_build(
         spark, web_fixture, tmp_path, monkeypatch):
     """ADVICE r5: the batch loop's over-cap bloom path. With
-    MAX_BLOOM_DELTA_HASHES forced tiny, every batch whose admitted count
+    MAX_DELTA_HASHES forced tiny, every batch whose admitted count
     exceeds the cap must delta-merge via the distributed per-shard bitmap
     build (never a driver-side hash collect), and the crawl must stay
     oracle-identical with every admitted hash bloom-positive."""
     import numpy as np
 
     import roddy_spark.operators.dedup as DD
-    import roddy_spark.plans.crawl as CR
 
-    monkeypatch.setattr(CR, "MAX_BLOOM_DELTA_HASHES", 2)
+    monkeypatch.setattr(DD, "MAX_DELTA_HASHES", 2)
     calls = []
     real = DD.sharded_bloom_from_hashes_df
 
@@ -125,7 +137,7 @@ def test_batch_overcap_bloom_delta_uses_distributed_build(
         calls.append(1)
         return real(df, *a, **kw)
 
-    # crawl.py imports the symbol from operators.dedup at call time
+    # refresh_visited_bloom resolves this name in operators.dedup per call
     monkeypatch.setattr(DD, "sharded_bloom_from_hashes_df", spy)
 
     pages_dict, pages_df, robots = web_fixture

@@ -559,15 +559,16 @@ def test_lm_crossentropy_matches_python_reference(spark):
     for i in range(120):
         n = rng.randint(0, 15)
         docs.append((i, " ".join(rng.choice(vocab) for _ in range(n))))
+    docs.append((120, None))            # null text scores as 0 tokens
 
     ref_docs = [d for d in docs if d[0] % 3 == 0]
     V = 10
-    cnt = Counter(t for _, tx in ref_docs for t in tx.split())
+    cnt = Counter(t for _, tx in ref_docs for t in (tx or "").split())
     model = dict(sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:V])
     total, vs = sum(model.values()), len(model)
 
     def score(text):
-        toks = text.split()
+        toks = (text or "").split()
         if not toks:
             return (0, 0.0, False)
         s = sum(math.log2(total + vs + 1) - math.log2(model.get(t, 0) + 1)
@@ -579,7 +580,7 @@ def test_lm_crossentropy_matches_python_reference(spark):
     sref = sdocs.filter(F.col("doc_id") % 3 == 0)
     got = {r["doc_id"]: r for r in Q.lm_crossentropy(
         sdocs, sref, vocab_size=V, threshold=5.0).collect()}
-    assert len(got) == 120
+    assert len(got) == 121
     for i, tx in docs:
         n, x, hi = score(tx)
         r = got[i]
@@ -635,10 +636,11 @@ def test_nb_quality_matches_python_reference(spark):
     docs = [(i, " ".join(rng.choice(vocab)
                          for _ in range(rng.randint(0, 12))))
             for i in range(100)]
+    docs.append((100, None))            # null text scores as 0 tokens
     V = 8
 
     def model(rows):
-        cnt = Counter(t for _, tx in rows for t in tx.split())
+        cnt = Counter(t for _, tx in rows for t in (tx or "").split())
         m = dict(sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:V])
         return m, sum(m.values()), len(m)
 
@@ -646,7 +648,7 @@ def test_nb_quality_matches_python_reference(spark):
     bm, bt, bv = model([d for d in docs if d[0] % 4 == 1])
 
     def score(text):
-        toks = text.split()
+        toks = (text or "").split()
         if not toks:
             return (0, 0.0, False)
         s = sum((math.log2(gm.get(t, 0) + 1) - math.log2(gt + gv + 1))
@@ -660,7 +662,7 @@ def test_nb_quality_matches_python_reference(spark):
         sdocs, sdocs.filter(F.col("doc_id") % 3 == 0),
         sdocs.filter(F.col("doc_id") % 4 == 1),
         vocab_size=V).collect()}
-    assert len(got) == 100
+    assert len(got) == 101
     for i, tx in docs:
         n, x, good = score(tx)
         r = got[i]

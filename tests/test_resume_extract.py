@@ -74,6 +74,51 @@ def test_resume_equals_uninterrupted(spark, web, tmp_path):
     assert state.success_count == full.success_count
 
 
+def test_resume_surfaces_corrupt_snapshot(spark, web, tmp_path):
+    """A snapshot that exists but cannot be read must fail the resume
+    with the read error: ``SnapshotStore.read`` returns None only for a
+    snapshot that does not exist, so a corrupt one can never pass for an
+    empty frontier."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    from roddy_spark.plans.crawl import SnapshotStore
+
+    _, pages_df = web
+    cfg = CrawlConfig(max_depth=3)
+    ckpt = str(tmp_path / "corrupt")
+    Crawler(spark, cfg, pages_df, ckpt, max_batches=1).run(
+        ["http://h0.test/"])
+    snap = os.path.join(ckpt, "candidates", "batch=1")
+    for e in os.listdir(snap):
+        if e.startswith("part-"):
+            with open(os.path.join(snap, e), "wb") as f:
+                f.write(b"not a parquet file")
+    # the JVM's read error, not a None frontier failing downstream
+    with pytest.raises((PySparkException, Py4JJavaError)):
+        Crawler(spark, cfg, pages_df, ckpt).run(resume=True)
+    assert SnapshotStore(ckpt).manifest()["completed_batch"] == 1
+
+
+def test_rollback_visited_surfaces_unreadable_file(tmp_path):
+    """Bucketed rollback reads each file's batch statistics; a file it
+    cannot read raises instead of being skipped (a skipped file could keep
+    an uncommitted batch's rows)."""
+    import os
+
+    from roddy_spark.plans.crawl import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "st"), visited_buckets=4)
+    os.makedirs(store._visited_path())
+    with open(os.path.join(store._visited_path(),
+                           "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="[Pp]arquet"):
+        store.rollback_visited(0)
+
+
 def test_filename_from_url(spark):
     """U6 golden triples (util_test.go:24-40 analog)."""
     from roddy_spark.functions.urls import filename_from_url

@@ -216,27 +216,27 @@ def test_intake_oversized_epoch_uses_distributed_delta(spark, tmp_path,
                                                        monkeypatch):
     """VERDICT r4 item 8 / ADVICE r5: only the per-epoch COUNT rides the
     visited write; an in-cap epoch fetches its hash delta with one bounded
-    column-pruned job, and an epoch that overflows MAX_EPOCH_HASHES must
+    column-pruned job, and an epoch that overflows MAX_DELTA_HASHES must
     delta-merge via the distributed per-shard bitmap path — no unbounded
     hash list ever crosses to the driver."""
     import numpy as np
 
-    import roddy_spark.streaming.frontier as FR
+    import roddy_spark.operators.dedup as DD
 
-    monkeypatch.setattr(FR, "MAX_EPOCH_HASHES", 3)
+    monkeypatch.setattr(DD, "MAX_DELTA_HASHES", 3)
     intake = str(tmp_path / "intake_big")
     cfg = CrawlConfig(max_depth=9, bloom_mode="on")
     ing = FrontierIngest(spark, cfg, intake, str(tmp_path / "store_big"),
                          str(tmp_path / "sckpt_big"))
 
     distributed_calls = []
-    real = FrontierIngest._merge_delta_distributed
+    real = DD.sharded_bloom_from_hashes_df
 
-    def spy(self, batch_no):
-        distributed_calls.append(batch_no)
-        return real(self, batch_no)
+    def spy(df, *a, **kw):
+        distributed_calls.append(df.count())
+        return real(df, *a, **kw)
 
-    monkeypatch.setattr(FrontierIngest, "_merge_delta_distributed", spy)
+    monkeypatch.setattr(DD, "sharded_bloom_from_hashes_df", spy)
 
     # epoch 1 (2 rows, under cap): driver-list merge; bloom becomes live
     _write_wave(spark, intake, [("http://h0.test/a", 1, 1),
@@ -247,7 +247,7 @@ def test_intake_oversized_epoch_uses_distributed_delta(spark, tmp_path,
     _write_wave(spark, intake,
                 [(f"http://h0.test/big{i}", 1, 1) for i in range(6)])
     assert ing.run_available_now() == 8
-    assert distributed_calls == [2]
+    assert distributed_calls == [6], "one distributed merge of epoch 2"
     # correctness of the fallback merge: every admitted hash bloom-positive
     hashes = np.array([r["url_hash"] for r in ing.visited().collect()],
                       dtype=np.int64)
