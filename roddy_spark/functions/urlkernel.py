@@ -317,96 +317,63 @@ def resolve_url(base: str | None, href: str | None) -> str | None:
 # The scalar canonicalizer costs ~20 µs/URL of pure Python; at 10^10 frontier
 # URLs that is the single largest CPU line in the engine. Almost all URLs a
 # crawl sees are ALREADY canonical (they were emitted by this same kernel one
-# level earlier), so a strict regex — evaluated in C by pandas.str.match —
+# level earlier), so a strict RE2 grammar — evaluated in C by pyarrow.compute,
+# measured ~20x faster than pandas' per-row sre on frontier URL shapes —
 # detects "canonicalize would be the identity" and passes those rows through
-# untouched; only the messy residue pays the scalar path. The regex is
-# deliberately conservative: any false NEGATIVE only costs speed, while a
-# false POSITIVE would be a wrong answer — so it admits only URLs where every
-# normalization step provably no-ops:
+# untouched; only the messy residue pays the scalar path. Three layers:
+#   * FAST (_FAST_RE2): identity on already-canonical URLs;
+#   * SEMI-fast (_SEMI_RE2): a vectorized rewrite, accepted only when its
+#     output re-matches _FAST_RE2;
+#   * scalar: everything else.
+# RE2 has no lookaheads, so one guard replaces the dot-segment assertion:
+# a C-speed substring scan for "/." (broader than a dot-segment test) sends
+# every row containing it to the scalar kernel, and every vectorized
+# matcher below assumes and requires that guard. RE2's $ is end-of-text
+# (Python's \Z), so a trailing newline cannot sneak past it.
+#
+# The fast grammar is deliberately conservative: any false NEGATIVE only
+# costs speed, while a false POSITIVE would be a wrong answer — so it
+# admits only URLs where every normalization step provably no-ops:
 #   * lowercase http/https scheme, lowercase ASCII host, no userinfo,
 #     no trailing dot (host ends alnum), no IDNA needed (ASCII classes);
-#   * no port, or a 1-4 digit non-default port without leading zeros;
+#   * no port, or a 1-4 digit non-default port without leading zeros
+#     (not-80/not-443 is enumerated as alternatives in _PORT_RE2);
 #   * non-empty path of RFC 3986 path-safe chars, no '%' (nothing to
-#     percent-normalize), no '.'/'..' segments (global lookahead);
+#     percent-normalize);
 #   * non-empty query/fragment if the '?'/'#' delimiter is present at all
 #     (canonicalize drops empty ones);
-#   * no whitespace/controls anywhere (not in any class; \Z anchoring so a
-#     trailing newline can't sneak past '$').
+#   * no whitespace/controls anywhere (not in any class).
 # Equivalence with the scalar kernel on ARBITRARY input is pinned by
 # tests/test_properties.py (vectorized == scalar, elementwise).
-
-import re as _re
-
 _SEG = r"A-Za-z0-9\-._~!$&'()*+,;=:@"
-_FAST_CANON_RE = _re.compile(
-    r"^(?!.*/\.\.?(?:[/?#]|\Z))"                      # no . / .. segments
-    r"https?://"
-    r"[a-z0-9](?:[a-z0-9.-]*[a-z0-9])?"               # host
-    r"(?::(?!80(?:[/?#]|\Z))(?!443(?:[/?#]|\Z))[1-9][0-9]{0,3})?"  # port
-    rf"/[{_SEG}/]*"                                   # path (starts with /)
-    rf"(?:\?[{_SEG}/?]+)?"                            # non-empty query
-    rf"(?:#[{_SEG}/?]+)?\Z")                          # non-empty fragment
-
-# relative href fast form: plain path segments, no scheme colon, no query or
-# fragment, no leading '/' (root-relative is a separate mask)
-_FAST_REL_RE = _re.compile(
-    rf"^[A-Za-z0-9\-._~!$&'()*+,;=@]+(?:/[A-Za-z0-9\-._~!$&'()*+,;=@]*)*\Z")
-_FAST_ROOTREL_RE = _re.compile(
-    rf"^/(?!/)[{_SEG}/]*(?:\?[{_SEG}/?]+)?(?:#[{_SEG}/?]+)?\Z")
-# origin (scheme://host[:port]) and directory (…through the last path '/')
-# of an already-fast-canonical base — both total on fast-canonical input
-_ORIGIN_RE = _re.compile(r"^(https?://[^/?#]+)")
-_BASEDIR_RE = _re.compile(r"^(https?://[^?#]*/)")
-
-# SEMI-fast form (r7): URLs that are canonical except for the three
-# normalizations a de-canonicalized-but-clean URL needs — scheme/host case
-# folding, default-port drop, empty-path → "/". The grammar admits only
-# inputs where every OTHER kernel step provably no-ops (ASCII host chars,
-# no userinfo/IPv6/percent/whitespace, no dot segments — same lookahead as
-# the fast form; digit-only port), the three fixes are applied with
-# vectorized string ops, and the CANDIDATE is accepted only if it
-# re-matches _FAST_CANON_RE — so a composition this grammar got wrong
-# (trailing host dot, 5-digit or zero-padded port, empty query, http:443)
-# falls back to the scalar kernel instead of producing a wrong answer.
-# This is the hot frontier shape: candidate URLs arrive with shouty
-# schemes/hosts but clean paths, and the scalar kernel at ~20 µs/URL was
-# the single largest CPU line of the level bench.
-# two groups only (pandas str.extract cost scales with group count —
-# measured 1.1 s vs 0.6 s per 500k at 4 vs 2 groups): the whole authority
-# prefix (scheme://host[:port] — lowercasing it is exactly scheme+host
-# folding, digits unaffected), and the rest. NO dot-segment lookahead
-# here or in the vectorized matchers below: a plain substring scan for
-# "/." (C-speed, broader than the lookahead — any row containing it
-# takes the scalar path) replaces the backtracking assertion, which was
-# the single costliest part of the regex work.
-_SEMI_CANON_RE = _re.compile(
-    r"^([Hh][Tt][Tt][Pp][Ss]?://"                     # scheme, any case
-    r"[A-Za-z0-9.-]+"                                 # host chars only
-    r"(?::[0-9]{1,5})?)"                              # digit-only port
-    rf"([/?#][{_SEG}/?#]*)?\Z")                       # path/query/fragment
-
-# _FAST_CANON_RE minus its dot-segment lookahead, for vectorized use
-# behind the shared contains("/.") guard
-_FAST_NOLOOK_RE = _re.compile(_FAST_CANON_RE.pattern.replace(
-    r"^(?!.*/\.\.?(?:[/?#]|\Z))", "^", 1))
-
-# RE2 twins for pyarrow.compute (r7): RE2 has no lookaheads — the "/."
-# substring guard replaces the dot-segment assertion, and the
-# not-80/not-443 port rule is enumerated as alternatives — and no \Z
-# ($ in RE2 is end-of-text, exactly Python's \Z). Arrow's RE2 kernels
-# measured ~20x faster than pandas' per-row sre on frontier URL shapes.
 _PORT_RE2 = (r"(?::(?:[1-9]|8[1-9]|[1-79][0-9]"            # 1-2 digits ≠ 80
              r"|4(?:4[0-24-9]|[0-35-9][0-9])|[1-35-9][0-9]{2}"  # 3 ≠ 443
              r"|[1-9][0-9]{3}))?")                         # 4 digits
 _FAST_RE2 = (r"^https?://[a-z0-9](?:[a-z0-9.-]*[a-z0-9])?"
              + _PORT_RE2
              + rf"/[{_SEG}/]*(?:\?[{_SEG}/?]+)?(?:#[{_SEG}/?]+)?$")
+# SEMI-fast form (r7): URLs that are canonical except for the three
+# normalizations a de-canonicalized-but-clean URL needs — scheme/host case
+# folding, default-port drop, empty-path → "/". The grammar admits only
+# inputs where every OTHER kernel step provably no-ops (ASCII host chars,
+# no userinfo/IPv6/percent/whitespace; digit-only port), the three fixes
+# are applied with vectorized string ops, and the CANDIDATE is accepted
+# only if it re-matches _FAST_RE2 — so a composition this grammar got
+# wrong (trailing host dot, 5-digit or zero-padded port, empty query,
+# http:443) falls back to the scalar kernel instead of producing a wrong
+# answer. This is the hot frontier shape: candidate URLs arrive with
+# shouty schemes/hosts but clean paths. Two groups: the whole authority
+# prefix (scheme://host[:port] — lowercasing it is exactly scheme+host
+# folding, digits unaffected), and the rest.
 _SEMI_RE2 = (r"^(?P<pre>[Hh][Tt][Tt][Pp][Ss]?://[A-Za-z0-9.-]+"
              r"(?::[0-9]{1,5})?)"
              rf"(?P<rest>[/?#][{_SEG}/?#]*)?$")
-# RE2 forms of the href fast-path grammars: the (?!/) of the
-# root-relative form becomes "either nothing or a non-slash segment
-# char follows the leading /"
+# href fast-path grammars for resolve_series: root-relative (a leading "/"
+# followed by nothing or a non-slash segment char, i.e. not "//") and
+# plain relative (path segments only: no scheme colon, query or
+# fragment); origin (scheme://host[:port]) and directory (…through the
+# last path '/') of an already-fast-canonical base — both total on
+# fast-canonical input
 _ROOTREL_RE2 = (rf"^/(?:[{_SEG}][{_SEG}/]*)?"
                 rf"(?:\?[{_SEG}/?]+)?(?:#[{_SEG}/?]+)?$")
 _REL_RE2 = (r"^[A-Za-z0-9\-._~!$&'()*+,;=@]+"
@@ -422,7 +389,6 @@ def canonicalize_series(urls):
     default-port / root-path fix, verified against the canonical regex;
     slow path = the scalar kernel."""
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
 

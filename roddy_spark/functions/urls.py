@@ -20,8 +20,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from roddy_spark.functions.urlkernel import (canonicalize_series,
-                                             resolve_series, url_host)
+from roddy_spark.functions.urlkernel import canonicalize_series, resolve_series
 
 
 @F.pandas_udf(StringType())
@@ -34,11 +33,6 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
 @F.pandas_udf(StringType())
 def resolve_udf(base: pd.Series, href: pd.Series) -> pd.Series:
     return resolve_series(base, href)
-
-
-@F.pandas_udf(StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(url_host, na_action="ignore")
 
 
 def canonicalize(col: Column | str) -> Column:

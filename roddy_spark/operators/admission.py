@@ -28,32 +28,13 @@ from roddy_spark.operators.rank import ordered_seq
 from roddy_spark.robots import robots_gate_series
 
 
-def admit(candidates: DataFrame, config: CrawlConfig,
-          visited: DataFrame | None, bloom=None,
-          robots_map: dict | None = None,
-          admitted_so_far: int = 0,
-          num_partitions: int | None = None,
-          order_cols: tuple[str, ...] = ("priority", "parent_seq",
-                                         "pos")) -> DataFrame:
-    """Apply the full admission chain; returns admitted rows with ``seq``
-    (global discovery rank, continuing from ``admitted_so_far``).
-
-    Candidates must carry canonical ``url_norm`` (non-null). Filter order
-    matches roddy.go:250-290: depth → budget → deny regexes → allow regexes
-    → domain deny → domain allow → robots → visited. Budget and visited act
-    only on rows that survived the cheap filters (set-equivalent to the
-    reference's sequential loop since budget consumption counts admissions
-    only — SURVEY.md §3.3).
-
-    ``order_cols`` is the discovery-order key (must be a total order over
-    the batch): the BFS loop uses (priority, parent_seq, pos); the
-    streaming intake substitutes its input-derived (priority, source file,
-    in-file row index) key so admission winners and ``seq`` never depend on
-    partitioning. Order columns are dropped from the output unless part of
-    the admitted schema.
-    """
-    df = candidates.withColumn("host", U.host_of("url_norm"))
-
+def admission_filters(df: DataFrame, config: CrawlConfig,
+                      robots_map: dict | None) -> DataFrame:
+    """The per-row check-before-fetch chain (roddy.go:250-290) over rows
+    carrying ``url_norm`` and ``depth``; adds ``host``. Shared by the BFS
+    admission below and the DFS fixpoint (plans/dfs.py), whose depth is
+    its path length."""
+    df = df.withColumn("host", U.host_of("url_norm"))
     # F2: depth (paging links carry the same depth, so a row filter — not
     # just the loop bound — is required)
     if config.max_depth:
@@ -82,7 +63,34 @@ def admit(candidates: DataFrame, config: CrawlConfig,
             return robots_gate_series(host, url, bc.value)
 
         df = df.filter(robots_ok(F.col("host"), F.col("url_norm")))
+    return df
 
+
+def admit(candidates: DataFrame, config: CrawlConfig,
+          visited: DataFrame | None, bloom=None,
+          robots_map: dict | None = None,
+          admitted_so_far: int = 0,
+          num_partitions: int | None = None,
+          order_cols: tuple[str, ...] = ("priority", "parent_seq",
+                                         "pos")) -> DataFrame:
+    """Apply the full admission chain; returns admitted rows with ``seq``
+    (global discovery rank, continuing from ``admitted_so_far``).
+
+    Candidates must carry canonical ``url_norm`` (non-null). Filter order
+    matches roddy.go:250-290: depth → budget → deny regexes → allow regexes
+    → domain deny → domain allow → robots → visited. Budget and visited act
+    only on rows that survived the cheap filters (set-equivalent to the
+    reference's sequential loop since budget consumption counts admissions
+    only — SURVEY.md §3.3).
+
+    ``order_cols`` is the discovery-order key (must be a total order over
+    the batch): the BFS loop uses (priority, parent_seq, pos); the
+    streaming intake substitutes its input-derived (priority, source file,
+    in-file row index) key so admission winners and ``seq`` never depend on
+    partitioning. Order columns are dropped from the output unless part of
+    the admitted schema.
+    """
+    df = admission_filters(candidates, config, robots_map)
     df = df.withColumn("url_hash", U.hash_of("url_norm"))
 
     # F8: first-occurrence-wins within the batch, then the visited anti-join

@@ -31,8 +31,6 @@ from roddy_spark.sources import codecs
 
 _PCM_MAGIC = b"PCM1"
 _VID_MAGIC = b"FVID"
-_EXTERNAL_AUDIO = {"mp3", "ogg", "flac", "wav"}
-_EXTERNAL_VIDEO = {"mp4", "webm", "mkv"}
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", StringType()),

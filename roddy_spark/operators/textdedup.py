@@ -14,7 +14,7 @@ Scale notes (the part that matters at 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from roddy_spark.functions import text as T
@@ -29,7 +29,6 @@ def _observe_candidates(df: DataFrame, telemetry: dict | None):
     item 6)."""
     if telemetry is None:
         return df
-    from pyspark.sql import Observation
     obs = Observation()
     telemetry["candidates"] = obs
     return df.observe(obs, F.count(F.lit(1)).alias("candidates"))
@@ -115,23 +114,22 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.8,
           .filter(F.col("df_freq") <= max_shingle_freq)
           .select("shingle"),
         "shingle")
-    if prefilter_minhash:
-        cand = _lsh_candidates(df, prefilter_hashes, prefilter_bands, n,
-                               text_col, id_col)
-        cand = _observe_candidates(cand, telemetry)
-        # same frequency-filtered shingle sets as the exact path, folded
-        # to one array per doc and joined back to candidates only
-        sh_arr = sh.groupBy("id").agg(F.collect_set("shingle").alias("sh"))
-        return (cand
-                .join(sh_arr.select(F.col("id").alias("id_a"),
-                                    F.col("sh").alias("sh_a")), "id_a")
-                .join(sh_arr.select(F.col("id").alias("id_b"),
-                                    F.col("sh").alias("sh_b")), "id_b")
-                .withColumn("jaccard", F.round(
-                    F.size(F.array_intersect("sh_a", "sh_b"))
-                    / F.size(F.array_union("sh_a", "sh_b")), 3))
-                .filter(F.col("jaccard") >= threshold)
-                .select("id_a", "id_b", "jaccard"))
+    cand = _lsh_candidates(df, prefilter_hashes, prefilter_bands, n,
+                           text_col, id_col)
+    cand = _observe_candidates(cand, telemetry)
+    # same frequency-filtered shingle sets as the exact path, folded
+    # to one array per doc and joined back to candidates only
+    sh_arr = sh.groupBy("id").agg(F.collect_set("shingle").alias("sh"))
+    return (cand
+            .join(sh_arr.select(F.col("id").alias("id_a"),
+                                F.col("sh").alias("sh_a")), "id_a")
+            .join(sh_arr.select(F.col("id").alias("id_b"),
+                                F.col("sh").alias("sh_b")), "id_b")
+            .withColumn("jaccard", F.round(
+                F.size(F.array_intersect("sh_a", "sh_b"))
+                / F.size(F.array_union("sh_a", "sh_b")), 3))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard"))
 
 
 def minhash_signatures(df: DataFrame, num_hashes: int = 8, n: int = 3,
@@ -254,8 +252,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     ``scratch_dir`` or ``$RODDY_SCRATCH_DIR``, durable parquet under a
     fresh subdirectory deleted on return — for a label frame that may
     exceed executor storage, the 100 TB shape. No collects; the only
-    driver-side signal is the per-round emptiness probe on the
-    (shrinking) delta frame.
+    driver-side signal is the per-round changed-row count, an
+    ``Observation`` on the labels roll — the convergence probe runs no
+    job of its own, and a zero count ends the loop.
 
     ``nodes`` (optional, single-column) adds isolated docs — they come out
     as their own singleton cluster. ``stats`` receives
@@ -276,9 +275,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             node_df = node_df.unionByName(extra).distinct()
         labels = sc.roll(node_df.withColumn("label", F.col("id")), "labels")
         delta = labels
-        if stats is not None:
-            stats["rounds"] = 0
-            stats["delta_rows"] = []
+        stats = {} if stats is None else stats
+        stats["rounds"] = 0
+        stats["delta_rows"] = []
         for _ in range(max_iters):
             # neighbors of changed nodes hear the new labels; min folds
             # map-side before the shuffle on dst
@@ -296,23 +295,21 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             hop = labels.select(F.col("id").alias("cand"),
                                 F.col("label").alias("ll"))
             better = F.col("cand") < F.col("label")
+            obs = Observation()
             labels = sc.roll(
                 labels.join(best, "id", "left")
                 .join(hop, "cand", "left")
                 .select("id",
                         F.when(better, F.least("cand", "ll"))
                         .otherwise(F.col("label")).alias("label"),
-                        F.coalesce(better, F.lit(False)).alias("changed")),
+                        F.coalesce(better, F.lit(False)).alias("changed"))
+                .observe(obs, F.count_if("changed").alias("n")),
                 "labels")
-            delta = labels.filter("changed").select("id", "label")
-            if stats is not None:
-                stats["rounds"] += 1
-                n = delta.count()
-                stats["delta_rows"].append(n)
-                if n == 0:
-                    break
-            elif delta.isEmpty():
+            stats["rounds"] += 1
+            stats["delta_rows"].append(obs.get["n"])
+            if stats["delta_rows"][-1] == 0:
                 break
+            delta = labels.filter("changed").select("id", "label")
         return (labels.select("id", F.col("label").alias("cluster_id"))
                 .localCheckpoint(eager=True))
 
@@ -406,7 +403,6 @@ def decontaminate(df: DataFrame, eval_df: DataFrame, n: int = 13,
            .withColumn("contaminated",
                        F.col("collisions") >= min_collisions))
     if telemetry is not None:
-        from pyspark.sql import Observation
         obs = Observation()
         telemetry["contamination"] = obs
         out = out.observe(

@@ -10,16 +10,21 @@ partitioned anti-join). The sandbox has no Iceberg runtime, so the store is
 parquet directories partitioned by batch plus an atomically-renamed JSON
 manifest — the same layout/contract, pluggable behind ``SnapshotStore``.
 
-Per-batch dataflow (each arrow is declarative DataFrame API; pandas UDFs
-only at parse/canonicalize):
+Per-batch dataflow (each arrow is declarative DataFrame API; Python runs
+only in Arrow passes: canonicalize, robots, link extraction):
 
-  candidates ─ admit(filters → in-batch dedup → bloom+anti-join → seq) ─┐
+  candidates ─ admit(admission_filters → in-batch dedup → bloom+anti-join
+               → seq) ─┐
   pending ────────────────────────────────────────────────────────────► pool
   pool ─ politeness_split(per-host window budget) ─► to_fetch + deferred
   to_fetch ─ fetch(join vs pages) ─► fetched  (mark-at-admission already
                                                persisted BEFORE this step)
-  fetched ─ parse_html_udf ─ explode links ─ resolve+canonicalize ─►
+  fetched ─ expand = link_rows(linkable pages ─ extract_links_fast ─
+            <base href> ─ resolve+canonicalize) ─►
       next candidates (depth+1; rel="next" keeps depth, priority 0 — D8)
+
+``admission_filters`` and ``link_rows`` are also the DFS fixpoint's
+filter and link steps (plans/dfs.py): one policy for both visit orders.
 
 Plan truncation: every written table is re-read before the next batch, so
 lineage never grows across iterations (SURVEY.md §7.4.5).
@@ -184,15 +189,8 @@ class SnapshotStore:
         mid-batch leaves rows the manifest never acknowledged; without this,
         a resume would see its own re-admissions as already visited (or,
         bucketed, duplicate them on re-append)."""
-        import shutil
         if not self.visited_buckets:
-            root = self.path("visited")
-            if os.path.isdir(root):
-                for e in os.listdir(root):
-                    if e.startswith("batch=") and \
-                            int(e.split("=", 1)[1]) > completed:
-                        shutil.rmtree(os.path.join(root, e),
-                                      ignore_errors=True)
+            self.rollback_table("visited", completed)
             return
         d = self._visited_path()
         if not os.path.isdir(d):
@@ -215,8 +213,7 @@ class SnapshotStore:
     def read_visited(self, spark: SparkSession,
                      batch: int | None = None) -> DataFrame | None:
         if not self.visited_buckets:
-            df = self.read(spark, "visited", batch)
-            return df if batch is None or df is None else df
+            return self.read(spark, "visited", batch)
         if not os.path.isdir(self._visited_path()):
             return None
         self._ensure_visited_table(spark)
@@ -365,25 +362,22 @@ def _empty_visited(spark: SparkSession) -> DataFrame:
     ]))
 
 
-def expand(fetched: DataFrame, allow_paging: bool = True) -> DataFrame:
-    """Fetched pages → next-batch candidates (SURVEY.md S4/S7/S8):
-    extract anchors, resolve against the effective <base href>,
-    canonicalize; rel="next" links keep the parent's depth at paging
-    priority (request.go:98-105 semantics), others go to depth+1. Children
-    inherit the parent's Context map (request.go:94-96). When the paging
-    budget (max_page_num, F11) is exhausted the caller passes
-    ``allow_paging=False`` and rel="next" links are dropped — the analog of
-    roddy skipping OnPaging callbacks past maxPageNum (roddy.go:235-238).
+def link_rows(fetched: DataFrame, cols: list[str], schema: StructType,
+              shape, allow_paging: bool = True) -> DataFrame:
+    """The one link pass over fetched pages (request.go:61-79), shared by
+    ``expand`` and the DFS fixpoint (plans/dfs.py): linkable pages (HTML
+    or 3xx) → anchors in document order (extract.extract_links_fast,
+    C-regex fast path + HTMLParser fallback) → effective <base href> →
+    child resolve/canonicalize (urlkernel.resolve_series) → NULL children
+    dropped. ``allow_paging=False`` drops rel="next" links before
+    resolution.
 
-    Implementation: ONE fused Arrow pass (mapInPandas) doing vectorized
-    anchor extraction (extract.extract_links_fast, C-regex fast path +
-    HTMLParser fallback) → base-href resolution → child resolve/canonicalize
-    (urlkernel.resolve_series). The page bodies cross into Python exactly
-    once and nothing body-sized is ever shuffled; the output is already the
-    flat candidate shape. Semantics equal the declarative
-    parse→explode→resolve pipeline (pinned by the extractor parity tests +
-    the e2e exact-(url,depth,seq) suite)."""
-    import numpy as np
+    ONE fused Arrow pass (mapInPandas): page bodies cross into Python
+    exactly once and nothing body-sized is shuffled. Per Arrow batch,
+    ``shape(pdf, links)`` builds the output rows of ``schema``: ``pdf``
+    holds the pages (``url_norm`` plus ``cols``), ``links`` one row per
+    kept link with ``page`` (row of ``pdf``), ``pos``, ``rel`` and
+    ``child``."""
     import pandas as pd
 
     from roddy_spark.extract import extract_links_fast
@@ -393,7 +387,7 @@ def expand(fetched: DataFrame, allow_paging: bool = True) -> DataFrame:
         F.col("success") & ((F.col("content_type") == "text/html")
                             | ((F.col("status") >= 300)
                                & (F.col("status") < 400))))
-    src = html.select("url_norm", "depth", "seq", "ctx", "body_html")
+    src = html.select("url_norm", *cols, "body_html")
 
     def gen(batches):
         for pdf in batches:
@@ -405,25 +399,43 @@ def expand(fetched: DataFrame, allow_paging: bool = True) -> DataFrame:
                 continue
             base = resolve_series(pdf["url_norm"], base_href)
             base = base.where(base.notna(), pdf["url_norm"])
-            page = links["page"].to_numpy()
             child = resolve_series(
-                base.iloc[page].reset_index(drop=True),
-                links["href"].reset_index(drop=True))
-            is_next = links["rel"].eq("next").to_numpy()
-            pdepth = pdf["depth"].to_numpy()[page]
-            out = pd.DataFrame({
-                "url_norm": child.to_numpy(),
-                "depth": np.where(is_next, pdepth, pdepth + 1)
-                           .astype("int32"),
-                "priority": np.where(is_next, PRIORITY_PAGING,
-                                     PRIORITY_CHILD).astype("int32"),
-                "parent_seq": pdf["seq"].to_numpy()[page],
-                "pos": links["pos"].to_numpy().astype("int32"),
-                "ctx": pdf["ctx"].iloc[page].to_numpy(),
-            })
-            yield out[out["url_norm"].notna()]
+                base.iloc[links["page"].to_numpy()].reset_index(drop=True),
+                links["href"].reset_index(drop=True)).to_numpy()
+            yield shape(pdf, links.assign(child=child)[pd.notna(child)])
 
-    return src.mapInPandas(gen, CANDIDATE_SCHEMA)
+    return src.mapInPandas(gen, schema)
+
+
+def expand(fetched: DataFrame, allow_paging: bool = True) -> DataFrame:
+    """Fetched pages → next-batch candidates (SURVEY.md S4/S7/S8) through
+    ``link_rows``: rel="next" links keep the parent's depth at paging
+    priority (request.go:98-105 semantics), others go to depth+1. Children
+    inherit the parent's Context map (request.go:94-96). When the paging
+    budget (max_page_num, F11) is exhausted the caller passes
+    ``allow_paging=False`` and rel="next" links are dropped — the analog of
+    roddy skipping OnPaging callbacks past maxPageNum (roddy.go:235-238).
+    Semantics equal the declarative parse→explode→resolve pipeline (pinned
+    by the extractor parity tests + the e2e exact-(url,depth,seq) suite)."""
+    import numpy as np
+    import pandas as pd
+
+    def candidates(pdf, links):
+        page = links["page"].to_numpy()
+        is_next = links["rel"].eq("next").to_numpy()
+        pdepth = pdf["depth"].to_numpy()[page]
+        return pd.DataFrame({
+            "url_norm": links["child"].to_numpy(),
+            "depth": np.where(is_next, pdepth, pdepth + 1).astype("int32"),
+            "priority": np.where(is_next, PRIORITY_PAGING,
+                                 PRIORITY_CHILD).astype("int32"),
+            "parent_seq": pdf["seq"].to_numpy()[page],
+            "pos": links["pos"].to_numpy().astype("int32"),
+            "ctx": pdf["ctx"].iloc[page].to_numpy(),
+        })
+
+    return link_rows(fetched, ["depth", "seq", "ctx"], CANDIDATE_SCHEMA,
+                     candidates, allow_paging)
 
 
 def extractions(fetched: DataFrame) -> DataFrame:
@@ -451,7 +463,6 @@ class Crawler:
                  max_batches: int = 200, on_request=None,
                  on_response=None, on_error=None, on_scraped=None,
                  cookies: dict | None = None,
-                 write_metrics: bool = True,
                  selectors: list[str] | None = None):
         self.spark = spark
         self.config = config
@@ -482,7 +493,6 @@ class Crawler:
         self.on_response = on_response
         self.on_error = on_error
         self.on_scraped = on_scraped
-        self.write_metrics = write_metrics
         # S4 generality (VERDICT r3 item 2): user-registered CSS selectors —
         # the migration slot for arbitrary OnHTML(selector) callbacks
         # (roddy.go:497-531; ChildText/ChildAttr element.go:77-88). Each
@@ -736,9 +746,8 @@ class Crawler:
             paging_count += int(obs_f.get["paging"] or 0)
 
             # 3b. per-partition lineage + fetch metrics (SURVEY.md D10)
-            if self.write_metrics:
-                from roddy_spark.streaming.events import fetch_rate_metrics
-                store.write(fetch_rate_metrics(fetched), "metrics", batch)
+            from roddy_spark.streaming.events import fetch_rate_metrics
+            store.write(fetch_rate_metrics(fetched), "metrics", batch)
 
             # 3b2. cookie write-back (K3, storage/storage.go:92-131):
             # set-cookie responses update the jar (last writer per host by

@@ -13,6 +13,12 @@ DataFrame self-joins (the north rule's phrase exactly):
   admission filters (depth = len(path), regex, domain, robots) ─ fetch ─
   extract links ─ children(path ⊕ [pos]) → next pending … until fixpoint.
 
+The filter and link steps are the BFS loop's own operators, so both visit
+orders share one policy: ``operators/admission.py:admission_filters``
+(the chain ``admit`` runs before its dedup) and
+``plans/crawl.py:link_rows`` (the Arrow pass under ``expand``), shaped
+here into (parent, pos, child) edges.
+
 A node whose best path improves re-expands, so better prefixes propagate to
 descendants; paths descend lexicographically and are bounded, so the loop
 terminates (tree-ish webs converge in ~max-depth iterations). Budgets and
@@ -23,54 +29,29 @@ oracle is pinned in tests/test_dfs.py.
 
 from __future__ import annotations
 
-from functools import reduce
-
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, IntegerType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from roddy_spark.config import CrawlConfig
 from roddy_spark.fetch import fetch_join
 from roddy_spark.functions import urls as U
+from roddy_spark.operators.admission import admission_filters
 # rolling round state, shared with the other fixpoints
 # (operators/scratch.py) — the plan-truncation device the BFS loop gets
 # from its SnapshotStore, applied to iterative self-joins
 from roddy_spark.operators.scratch import RoundState
-
-_PENDING_SCHEMA = StructType([
-    StructField("url_norm", StringType()),
-    StructField("path", ArrayType(IntegerType())),
-])
+from roddy_spark.plans.crawl import link_rows
 
 
 def _admissible(df: DataFrame, config: CrawlConfig,
                 robots_map: dict | None) -> DataFrame:
-    """The DFS-relevant admission filters (depth comes from the path)."""
-    if config.max_depth:
-        df = df.filter(F.size("path") <= config.max_depth)
-    for pat in config.disallowed_url_filters:
-        df = df.filter(~F.col("url_norm").rlike(pat))
-    if config.url_filters:
-        df = df.filter(reduce(lambda a, b: a | b,
-                              [F.col("url_norm").rlike(p)
-                               for p in config.url_filters]))
-    host = U.host_of("url_norm")
-    if config.disallowed_domains:
-        df = df.filter(~host.isin(*config.disallowed_domains))
-    if config.allowed_domains:
-        df = df.filter(host.isin(*config.allowed_domains))
-    if config.respect_robots and robots_map:
-        from roddy_spark.robots import robots_gate_series
-        bc = df.sparkSession.sparkContext.broadcast(robots_map)
-
-        @F.pandas_udf("boolean")
-        def ok(url: pd.Series, h: pd.Series) -> pd.Series:
-            return robots_gate_series(h, url, bc.value)
-
-        df = df.filter(ok(F.col("url_norm"), host))
-    return df
+    """(url_norm, path) rows that pass the BFS admission filters, with
+    depth = len(path)."""
+    return (admission_filters(df.withColumn("depth", F.size("path")),
+                              config, robots_map)
+            .select("url_norm", "path"))
 
 
 _EDGE_SCHEMA = StructType([
@@ -80,42 +61,14 @@ _EDGE_SCHEMA = StructType([
 ])
 
 
-def _extract_edges(fetched: DataFrame) -> DataFrame:
-    """fetched(url_norm, body_html, …) → edges(url_norm, pos, child):
-    resolved+canonicalized outgoing links in document order."""
-    import pandas as pd
-
-    from roddy_spark.extract import extract_links_fast
-    from roddy_spark.functions.urlkernel import resolve_series
-
-    html = fetched.filter(
-        F.col("success") & ((F.col("content_type") == "text/html")
-                            | ((F.col("status") >= 300)
-                               & (F.col("status") < 400))))
-    src = html.select("url_norm", "body_html")
-
-    def gen(batches):
-        for pdf in batches:
-            pdf = pdf.reset_index(drop=True)
-            base_href, links = extract_links_fast(pdf["body_html"])
-            if not len(links):
-                continue
-            base = resolve_series(pdf["url_norm"], base_href)
-            base = base.where(base.notna(), pdf["url_norm"])
-            page = links["page"].to_numpy()
-            child = resolve_series(
-                base.iloc[page].reset_index(drop=True),
-                links["href"].reset_index(drop=True))
-            out = pd.DataFrame({
-                "url_norm": pdf["url_norm"].to_numpy()[page],
-                "pos": links["pos"].to_numpy().astype("int32"),
-                "child": child.to_numpy(),
-            })
-            yield out[out["child"].notna()]
-
-    return src.mapInPandas(gen, _EDGE_SCHEMA)
-
-
+def _edge_rows(pdf: pd.DataFrame, links: pd.DataFrame) -> pd.DataFrame:
+    """``link_rows`` shape: (parent url_norm, pos, child) in document
+    order."""
+    return pd.DataFrame({
+        "url_norm": pdf["url_norm"].to_numpy()[links["page"].to_numpy()],
+        "pos": links["pos"].to_numpy().astype("int32"),
+        "child": links["child"].to_numpy(),
+    })
 
 
 def dfs_preorder(spark: SparkSession, pages: DataFrame, seeds: list[str],
@@ -153,7 +106,9 @@ def dfs_preorder(spark: SparkSession, pages: DataFrame, seeds: list[str],
     dependency chain (≲ longest admissible path).
 
     ``stats`` (optional dict) receives {"rounds", "delta_rows"} (changed
-    URLs per round) for instrumentation/tests.
+    URLs per round). Each count rides an ``Observation`` on the roll that
+    materializes the changed set, and a zero count ends the loop — the
+    convergence probe runs no job of its own.
 
     Iteration state (paths/changed/edges/fetched_urls) rolls through
     ``RoundState``, one live version per frame — flat storage at any
@@ -167,18 +122,19 @@ def dfs_preorder(spark: SparkSession, pages: DataFrame, seeds: list[str],
                     .filter(F.col("url_norm").isNotNull())
                     .select("url_norm", F.col("path").cast("array<int>")
                             .alias("path")))
-        seeds_df = sc.roll(_admissible(seeds_df, config, robots_map),
+        obs = Observation()
+        seeds_df = sc.roll(_admissible(seeds_df, config, robots_map)
+                           .observe(obs, F.count(F.lit(1)).alias("n")),
                            "seeds")
         paths = seeds_df           # current estimate P (url_norm, path)
         changed = seeds_df.select("url_norm")  # changed last round
         edges: DataFrame | None = None  # (url_norm parent, pos, child)
         fetched_urls: DataFrame | None = None
-        if stats is not None:
-            stats["rounds"] = 0
-            stats["delta_rows"] = [changed.count()]
+        stats = {} if stats is None else stats
+        stats["rounds"] = 0
+        stats["delta_rows"] = [obs.get["n"]]
         for _ in range(max_iters):
-            if stats is not None:
-                stats["rounds"] += 1
+            stats["rounds"] += 1
             # fetch + extract edges for changed nodes present in the
             # estimate table and not yet fetched (each url once)
             to_fetch = changed.join(paths, "url_norm", "left_semi")
@@ -186,7 +142,8 @@ def dfs_preorder(spark: SparkSession, pages: DataFrame, seeds: list[str],
                 to_fetch = to_fetch.join(fetched_urls, "url_norm",
                                          "left_anti")
             if not to_fetch.isEmpty():
-                new_edges = _extract_edges(fetcher(to_fetch, pages))
+                new_edges = link_rows(fetcher(to_fetch, pages), [],
+                                      _EDGE_SCHEMA, _edge_rows)
                 edges = sc.roll(new_edges if edges is None else
                                 edges.unionByName(new_edges), "edges")
                 fetched_urls = sc.roll(
@@ -214,20 +171,18 @@ def dfs_preorder(spark: SparkSession, pages: DataFrame, seeds: list[str],
             new_est = sc.roll(cand.groupBy("url_norm")
                               .agg(F.min("path").alias("path")), "est")
             old_aff = paths.join(aff, "url_norm", "left_semi")
+            obs = Observation()
             changed = sc.roll(
                 new_est.join(old_aff, ["url_norm", "path"], "left_anti")
                 .unionByName(old_aff.join(new_est, ["url_norm", "path"],
                                           "left_anti"))
-                .select("url_norm").distinct(), "changed")
+                .select("url_norm").distinct()
+                .observe(obs, F.count(F.lit(1)).alias("n")), "changed")
+            stats["delta_rows"].append(obs.get["n"])
+            if stats["delta_rows"][-1] == 0:
+                break  # new_est equals old_aff: paths is the fixpoint
             paths = sc.roll(paths.join(aff, "url_norm", "left_anti")
                             .unionByName(new_est), "paths")
-            if stats is not None:
-                n_changed = changed.count()
-                stats["delta_rows"].append(n_changed)
-                if n_changed == 0:
-                    break
-            elif changed.isEmpty():
-                break
         # preorder rank: lexicographic path order (shorter prefix first —
         # Spark array ordering — which is exactly parent-before-child)
         from roddy_spark.operators.rank import (ordered_seq,

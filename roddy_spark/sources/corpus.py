@@ -86,8 +86,3 @@ def corpus_df(spark: SparkSession, n: int, seed: int = 42,
             yield pd.DataFrame(rows)
 
     return spark.range(0, n, 1, parts).mapInPandas(gen, CORPUS_SCHEMA)
-
-
-def write_corpus(spark: SparkSession, path: str, n: int, seed: int = 42,
-                 partitions: int | None = None) -> None:
-    corpus_df(spark, n, seed, partitions).write.mode("overwrite").parquet(path)

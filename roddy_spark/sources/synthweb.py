@@ -49,11 +49,6 @@ PAGE_SCHEMA = StructType([
     StructField("body_html", StringType()),
 ])
 
-ROBOTS_SCHEMA = StructType([
-    StructField("host", StringType()),
-    StructField("robots_txt", StringType()),
-])
-
 # fixed routes appended after the /p/{j} tree on every host
 _FIXED_ROUTES = ("_root", "100%25", "disallowed", "allowed", "boom",
                  "redirect", "redirected/", "base", "deep/dir/leaf",
@@ -279,10 +274,6 @@ def robots_pandas(cfg: WebConfig) -> pd.DataFrame:
             txt = "User-agent: *\nDisallow:\n"
         rows.append({"host": _host(k), "robots_txt": txt})
     return pd.DataFrame(rows)
-
-
-def robots_df(spark: SparkSession, cfg: WebConfig) -> DataFrame:
-    return spark.createDataFrame(robots_pandas(cfg), ROBOTS_SCHEMA)
 
 
 def default_seeds(cfg: WebConfig) -> list[str]:

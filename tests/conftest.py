@@ -9,6 +9,10 @@ import pytest
 
 os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
 os.environ.setdefault("PYSPARK_DRIVER_PYTHON", sys.executable)
+# The suite's data is small. With the engine's default 8g driver heap the
+# one JVM grew to 14.7 GB RSS by the DFS tests and was OOM-killed on a
+# 16 GB, 4-core box; with a 4g heap it peaks near 4 GB over the suite.
+os.environ.setdefault("RODDY_DRIVER_MEM", "4g")
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

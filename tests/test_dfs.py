@@ -25,6 +25,11 @@ CONFIGS = {
                             allowed_domains=("h0.test", "h1.test")),
                 ["http://h0.test/"]),
     "unlimited": (CrawlConfig(), ["http://h1.test/"]),
+    # allow regexes + domain deny (the second seed's host is denied)
+    "allow_regex_domain_deny": (
+        CrawlConfig(max_depth=4, url_filters=(r"/p/", r"\.test/$"),
+                    disallowed_domains=("h1.test",)),
+        ["http://h0.test/", "http://h1.test/"]),
 }
 
 
