@@ -9,7 +9,7 @@ per the north rule.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -44,7 +44,6 @@ class CrawlConfig:
     allow_url_revisit: bool = False    # F9: bypass the visited anti-join
     per_host_budget: int = 0           # 0 = unlimited; else fetches/host/level (D5/D6)
     respect_robots: bool = False       # north-rule addition (not in reference engine)
-    user_agent: str = "roddy-spark/0.1"
     # scale knobs
     salt_buckets: int = 8              # skew salt for repartition-by-host (D6)
     # visited-set bloom prefilter (operators/dedup.py ShardedBloom): the
@@ -64,8 +63,6 @@ class CrawlConfig:
     # final visited set fits an executor task (10^10 rows → K in the
     # thousands).
     visited_buckets: int = 0
-    shuffle_partitions: int | None = None  # override spark.sql.shuffle.partitions per crawl
-    extra: dict = field(default_factory=dict, hash=False, compare=False)
 
     def __post_init__(self) -> None:
         for name in ("max_depth", "max_requests", "max_responses", "per_host_budget"):

@@ -14,8 +14,9 @@ One selection rule, no option of its own:
   ``<dir>/roddy_<uuid>`` subdirectory. A cluster deploy points this at
   shared storage (HDFS/NFS/object store), since every executor must
   read what any executor wrote; the state survives executor loss.
-  Deletes go through the Hadoop ``FileSystem`` of the path, so every
-  scheme Spark can write is also cleaned up.
+  Deletes go through the engine's one storage-path helper
+  (``roddy_spark.fs``, Hadoop ``FileSystem``), so every scheme Spark can
+  write is also cleaned up, and a delete that fails raises.
 * **In memory** — otherwise each version is an eager
   ``localCheckpoint`` and the superseded blocks are dropped. No parquet
   write/commit/read round-trip per roll, which dominates fixpoint wall
@@ -34,6 +35,8 @@ import uuid
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+
+from roddy_spark import fs
 
 
 class RoundState:
@@ -69,7 +72,7 @@ class RoundState:
     def release(self) -> None:
         """Drop every live version (and the durable root directory)."""
         if self.root is not None:
-            self._delete(self.root)
+            fs.delete(self.root)
         else:
             for df in self.live.values():
                 self._drop(df)
@@ -77,7 +80,7 @@ class RoundState:
 
     def _drop(self, kept: DataFrame | str) -> None:
         if self.root is not None:
-            self._delete(kept)
+            fs.delete(kept)
             return
         # Dataset.unpersist() only clears cacheManager entries, not a
         # localCheckpoint's RDD blocks; reach the checkpointed RDD
@@ -90,9 +93,3 @@ class RoundState:
             kept._jdf.queryExecution().analyzed().rdd().unpersist(False)
         except (Py4JError, AttributeError):
             kept.unpersist()
-
-    def _delete(self, path: str) -> None:
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        conf = self.spark._jsc.hadoopConfiguration()
-        p.getFileSystem(conf).delete(p, True)

@@ -12,6 +12,9 @@ not reimplementation); SQL twins restate the semantics in portable SQL.
 
 from __future__ import annotations
 
+import tempfile
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -32,6 +35,24 @@ _TOKS = "list_filter(string_split(lower({x}), ' '), t -> t != '')"
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+@contextmanager
+def _small_loop(spark: SparkSession):
+    """Temp state dir for a tiny crawl loop, with 4 shuffle partitions
+    pinned meanwhile (a default of 200 schedules thousands of empty tasks);
+    both are undone after, so results are ``_detached`` first."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        with tempfile.TemporaryDirectory(prefix="roddy_loop_") as tmp:
+            yield tmp
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _detached(df: DataFrame) -> DataFrame:
+    return df.sparkSession.createDataFrame(df.collect(), df.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1810,8 +1831,6 @@ def q_frontier_stream_ingest(spark, sf_dir):
     semantics is additionally pinned in tests/test_streaming_frontier.py.
     Candidates derive from the customer table (URL-ified), sent in two
     waves with cross-wave duplicates the persistent dedup must drop."""
-    import tempfile
-
     from roddy_spark.config import CrawlConfig
     from roddy_spark.streaming.frontier import FrontierIngest
     cust = _read(spark, sf_dir, "customer").filter(F.col("c_custkey") < 400)
@@ -1820,10 +1839,7 @@ def q_frontier_stream_ingest(spark, sf_dir):
                  .cast("string"), F.lit(".test/c/"),
                  F.col("c_custkey").cast("string")).alias("raw_url"),
         F.lit(1).alias("depth"), F.lit(1).alias("priority"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        tmp = tempfile.mkdtemp(prefix="roddy_stream_ingest_")
+    with _small_loop(spark) as tmp:
         intake = f"{tmp}/intake"
         raw.filter(F.col("raw_url").rlike("/c/[0-9]*[02468]$")) \
            .coalesce(1).write.mode("append").parquet(intake)
@@ -1832,10 +1848,8 @@ def q_frontier_stream_ingest(spark, sf_dir):
         ing.run_available_now()
         raw.coalesce(1).write.mode("append").parquet(intake)  # wave 2 ∪ dups
         ing.run_available_now()
-        return (ing.visited().select("url_norm", "depth", "seq")
-                .orderBy("seq"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        return _detached(ing.visited().select("url_norm", "depth", "seq")
+                         .orderBy("seq"))
 
 
 # SQL twin (VERDICT r5 item 3): the admitted set is a PURE FUNCTION of the
@@ -1875,27 +1889,16 @@ def q_crawl_bfs(spark, sf_dir):
     HTML-anchor extraction with a recursive-CTE hash oracle, and DFS has no
     budget/politeness surface, so the synthetic-web variant added no
     uncovered path (tests/test_dfs.py still runs the generator web)."""
-    import tempfile
-
     from roddy_spark.config import CrawlConfig
     from roddy_spark.plans.crawl import Crawler
     from roddy_spark.sources.synthweb import WebConfig, synthweb_df
     cfg = WebConfig(n_hosts=2, n_pages=60, n_corpus=20)
     pages = synthweb_df(spark, cfg, partitions=2)
-    # the caller's session may default to 200 shuffle partitions — a tiny
-    # crawl would then schedule thousands of empty tasks; pin and restore
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        with tempfile.TemporaryDirectory() as ckpt:
-            state = Crawler(spark,
-                            CrawlConfig(max_depth=3, per_host_budget=8),
-                            pages, ckpt).run(["http://h0.test/"])
-            df = state.visited(spark).select("url_norm", "depth", "seq")
-            df = spark.createDataFrame(df.collect(), df.schema)  # detach
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return df
+    with _small_loop(spark) as ckpt:
+        state = Crawler(spark, CrawlConfig(max_depth=3, per_host_budget=8),
+                        pages, ckpt).run(["http://h0.test/"])
+        return _detached(state.visited(spark).select("url_norm", "depth",
+                                                     "seq"))
 
 
 # ---------------------------------------------------------------------------
@@ -1970,22 +1973,14 @@ def q_crawl_bfs_order(spark, sf_dir):
     """Full Crawler loop (admission, dedup, expansion, seq assignment) on
     the relational shop web; output (url_norm, depth, seq) hash-matches the
     recursive-CTE BFS oracle."""
-    import tempfile
-
     from roddy_spark.config import CrawlConfig
     from roddy_spark.plans.crawl import Crawler
     pages = _shop_pages(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        with tempfile.TemporaryDirectory() as ckpt:
-            state = Crawler(spark, CrawlConfig(max_depth=3), pages,
-                            ckpt).run(["http://shop.test/"])
-            df = state.visited(spark).select("url_norm", "depth", "seq")
-            df = spark.createDataFrame(df.collect(), df.schema)  # detach
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return df
+    with _small_loop(spark) as ckpt:
+        state = Crawler(spark, CrawlConfig(max_depth=3), pages,
+                        ckpt).run(["http://shop.test/"])
+        return _detached(state.visited(spark).select("url_norm", "depth",
+                                                     "seq"))
 
 
 def q_crawl_dfs_order(spark, sf_dir):
@@ -1994,13 +1989,9 @@ def q_crawl_dfs_order(spark, sf_dir):
     from roddy_spark.config import CrawlConfig
     from roddy_spark.plans.dfs import dfs_preorder
     pages = _shop_pages(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with _small_loop(spark):
         return dfs_preorder(spark, pages, ["http://shop.test/"],
                             CrawlConfig(max_depth=3))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 _SHOP_EDGES_SQL = f"""

@@ -8,7 +8,8 @@ Snapshot store: in production this is Iceberg (atomic snapshots, hidden
 partitioning by ``batch``, bucketing by ``url_hash`` for the storage-
 partitioned anti-join). The sandbox has no Iceberg runtime, so the store is
 parquet directories partitioned by batch plus an atomically-renamed JSON
-manifest — the same layout/contract, pluggable behind ``SnapshotStore``.
+manifest — the same layout/contract, pluggable behind ``SnapshotStore``,
+whose paths all go through Hadoop ``FileSystem`` (roddy_spark/fs.py).
 
 Per-batch dataflow (each arrow is declarative DataFrame API; Python runs
 only in Arrow passes: canonicalize, robots, link extraction):
@@ -32,16 +33,19 @@ lineage never grows across iterations (SURVEY.md §7.4.5).
 
 from __future__ import annotations
 
+import hashlib
+import inspect
 import json
-import os
 import time
 from dataclasses import dataclass
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (IntegerType, LongType, MapType, StringType,
                                StructField, StructType)
 
+from roddy_spark import fs
 from roddy_spark.config import CrawlConfig
 from roddy_spark.extract import parse_html_udf
 from roddy_spark.fetch import fetch_join
@@ -50,6 +54,7 @@ from roddy_spark.operators.admission import admit
 from roddy_spark.operators.dedup import refresh_visited_bloom
 from roddy_spark.operators.politeness import politeness_split
 from roddy_spark.operators.rank import release_rank_caches
+from roddy_spark.streaming.events import fetch_rate_metrics
 
 PRIORITY_PAGING = 0
 PRIORITY_CHILD = 1
@@ -101,6 +106,12 @@ class SnapshotStore:
     the manifest names the last COMPLETE batch; partial writes of batch N+1
     are invisible until the manifest flips).
 
+    Every path goes through ``roddy_spark.fs`` (Hadoop ``FileSystem``), so
+    the root is any path Spark can write. The manifest commits as a temp
+    file renamed over ``manifest.json`` with overwrite: atomic on HDFS and
+    the local FS. Object stores have no atomic rename; there the manifest
+    needs a conditional put or a catalog (Iceberg's catalog commit).
+
     With ``visited_buckets = K > 0`` the visited table is a bucketed table
     (CLUSTERED BY url_hash SORTED BY url_hash INTO K BUCKETS) — the
     sandbox analog of Iceberg's ``bucket(K, url_hash)`` partition transform
@@ -112,37 +123,32 @@ class SnapshotStore:
     whole history every micro-batch."""
 
     def __init__(self, root: str, visited_buckets: int = 0):
-        self.root = root
+        self.root = root.rstrip("/")
         self.visited_buckets = visited_buckets
         # catalog entry name: deterministic per store ROOT (not per
         # instance) — resumed crawls / repeated store construction over one
         # path reuse a single catalog entry instead of leaking
         # rs_visited_<uuid> definitions in a long-lived session (ADVICE r2)
-        import hashlib
-        digest = hashlib.sha1(os.path.abspath(root).encode()).hexdigest()
+        digest = hashlib.sha1(fs.qualify(root).encode()).hexdigest()
         self._visited_table = f"rs_visited_{digest[:12]}"
-        os.makedirs(root, exist_ok=True)
 
     # -- bucketed visited table ----------------------------------------
     def _visited_path(self) -> str:
-        return os.path.join(self.root, "visited_bucketed")
+        return f"{self.root}/visited_bucketed"
 
     def _bucket_spec_of(self, spark: SparkSession) -> int | None:
         """Bucket count of the existing catalog entry, or None."""
-        try:
-            for r in spark.sql(
-                    f"DESCRIBE FORMATTED {self._visited_table}").collect():
-                if r["col_name"].strip() == "Num Buckets":
-                    return int(r["data_type"])
-        except Exception:
-            pass
+        for r in spark.sql(
+                f"DESCRIBE FORMATTED {self._visited_table}").collect():
+            if r["col_name"].strip() == "Num Buckets":
+                return int(r["data_type"])
         return None
 
     def _ensure_visited_table(self, spark: SparkSession) -> None:
         # pre-create the location: a CREATE TABLE over a missing dir makes
         # the first insert's file listing log a WARN + stacktrace; also
         # covers a stale catalog entry whose dir was deleted between runs
-        os.makedirs(self._visited_path(), exist_ok=True)
+        fs.mkdirs(self._visited_path())
         if spark.catalog.tableExists(self._visited_table):
             # deterministic per-root naming can meet a STALE entry from an
             # earlier store over the same root with a different bucket
@@ -155,7 +161,7 @@ class SnapshotStore:
             if existing is not None and existing != self.visited_buckets:
                 has_data = any(
                     e.endswith(".parquet") or e.startswith("part-")
-                    for e in os.listdir(self._visited_path()))
+                    for e in fs.list_names(self._visited_path()))
                 if has_data:
                     raise ValueError(
                         f"visited table at {self._visited_path()} has "
@@ -182,39 +188,36 @@ class SnapshotStore:
         (df.write.mode("append")
            .insertInto(self._visited_table))
 
-    def rollback_visited(self, completed: int) -> None:
+    def rollback_visited(self, spark: SparkSession, completed: int) -> None:
         """Delete visited data written by batches > ``completed`` — the
         Iceberg uncommitted-snapshot rollback analog. Visited is written
         BEFORE the manifest commits (mark-at-admission), so a job killed
         mid-batch leaves rows the manifest never acknowledged; without this,
         a resume would see its own re-admissions as already visited (or,
-        bucketed, duplicate them on re-append)."""
+        bucketed, duplicate them on re-append). Bucketed, each append's
+        files hold one batch: the scan finds the files of rows with
+        ``batch > completed``, and a file it cannot read raises."""
         if not self.visited_buckets:
             self.rollback_table("visited", completed)
             return
-        d = self._visited_path()
-        if not os.path.isdir(d):
+        if not fs.exists(self._visited_path()):
             return
-        import pyarrow.parquet as pq
-        for e in os.listdir(d):
-            p = os.path.join(d, e)
-            if not e.endswith(".parquet") and not e.startswith("part-"):
-                continue
-            # an unreadable file raises: skipping it could keep rows of an
-            # uncommitted batch. A file with no row groups holds no rows.
-            md = pq.ParquetFile(p).metadata
-            if md.num_row_groups == 0:
-                continue
-            col = md.schema.names.index("batch")
-            stats = md.row_group(0).column(col).statistics
-            if stats is not None and stats.min > completed:
-                os.remove(p)
+        self._ensure_visited_table(spark)
+        # another session may have appended since this one listed the files
+        spark.catalog.refreshTable(self._visited_table)
+        stale = (spark.table(self._visited_table)
+                 .filter(F.col("batch") > completed)
+                 .select("_metadata.file_path").distinct().collect())
+        for r in stale:
+            # file_path is a URI string: percent-decode it back to a path
+            fs.delete(unquote(r["file_path"]))
+        spark.catalog.refreshTable(self._visited_table)
 
     def read_visited(self, spark: SparkSession,
                      batch: int | None = None) -> DataFrame | None:
         if not self.visited_buckets:
             return self.read(spark, "visited", batch)
-        if not os.path.isdir(self._visited_path()):
+        if not fs.exists(self._visited_path()):
             return None
         self._ensure_visited_table(spark)
         df = spark.table(self._visited_table)
@@ -224,34 +227,32 @@ class SnapshotStore:
         return df
 
     def path(self, table: str, batch: int | None = None) -> str:
-        p = os.path.join(self.root, table)
-        return p if batch is None else os.path.join(p, f"batch={batch}")
+        p = f"{self.root}/{table}"
+        return p if batch is None else f"{p}/batch={batch}"
 
     def write(self, df: DataFrame, table: str, batch: int) -> None:
         df.write.mode("overwrite").parquet(self.path(table, batch))
+
+    def _batches(self, table: str) -> list[int]:
+        """Batch numbers with a snapshot directory of ``table``."""
+        return [int(e.split("=", 1)[1]) for e in fs.list_names(
+            self.path(table)) if e.startswith("batch=")]
 
     def read(self, spark: SparkSession, table: str,
              batch: int | None = None) -> DataFrame | None:
         # ``batch`` is stored as a REGULAR column where needed; the
         # directory layout is only for snapshot isolation, so reads go
-        # through an explicit glob (no partition-column inference). None
-        # means the snapshot does not exist (the existence check also
-        # avoids Spark's noisy WARN+stacktrace probe on globs that match
-        # nothing, e.g. first-batch reads); a snapshot that exists but
+        # through an explicit path list (no partition-column inference, and
+        # no "batch=*" glob: Spark probes a glob STRING for streaming-sink
+        # metadata and logs a noisy FileNotFoundException per read). None
+        # means the snapshot does not exist; a snapshot that exists but
         # cannot be read raises rather than passing for an empty table.
-        root = self.path(table)
         if batch is not None:
             paths = [self.path(table, batch)]
-            if not os.path.isdir(paths[0]):
+            if not fs.exists(paths[0]):
                 return None
         else:
-            # explicit dir list, not a "batch=*" glob: Spark probes the glob
-            # STRING for streaming-sink metadata and logs a noisy
-            # FileNotFoundException stack trace per read
-            if not os.path.isdir(root):
-                return None
-            paths = sorted(os.path.join(root, e) for e in os.listdir(root)
-                           if e.startswith("batch="))
+            paths = [self.path(table, b) for b in sorted(self._batches(table))]
             if not paths:
                 return None
         return spark.read.parquet(*paths)
@@ -262,14 +263,9 @@ class SnapshotStore:
         ``read_latest``: without it, a later resume could resurrect an
         orphaned snapshot that a successful intervening re-run never
         overwrote (e.g. its refetch set no cookies)."""
-        import shutil
-        root = self.path(table)
-        if not os.path.isdir(root):
-            return
-        for e in os.listdir(root):
-            if e.startswith("batch=") and \
-                    int(e.split("=", 1)[1]) > completed:
-                shutil.rmtree(os.path.join(root, e), ignore_errors=True)
+        for b in self._batches(table):
+            if b > completed:
+                fs.delete(self.path(table, b))
 
     def read_latest(self, spark: SparkSession, table: str,
                     max_batch: int) -> DataFrame | None:
@@ -279,29 +275,19 @@ class SnapshotStore:
         snapshot, but an earlier one does. Listing-only (no Spark jobs);
         batches > max_batch are a killed run's uncommitted writes and are
         excluded for snapshot isolation."""
-        root = self.path(table)
-        if not os.path.isdir(root):
-            return None
-        nums = [int(e.split("=", 1)[1]) for e in os.listdir(root)
-                if e.startswith("batch=")]
-        nums = [b for b in nums if b <= max_batch]
+        nums = [b for b in self._batches(table) if b <= max_batch]
         if not nums:
             return None
         return self.read(spark, table, max(nums))
 
     def manifest(self) -> dict | None:
-        p = os.path.join(self.root, "manifest.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        text = fs.read_text(f"{self.root}/manifest.json")
+        return None if text is None else json.loads(text)
 
     def commit_manifest(self, m: dict) -> None:
-        p = os.path.join(self.root, "manifest.json")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-        os.replace(tmp, p)  # atomic snapshot flip
+        # atomic snapshot flip: temp file + rename with overwrite
+        fs.write_text_atomic(f"{self.root}/manifest.json",
+                             json.dumps(m, indent=1))
 
 
 @dataclass
@@ -322,7 +308,10 @@ class CrawlState:
         return self.store.read(spark, "fetches")
 
     def metrics(self, spark: SparkSession) -> DataFrame | None:
-        return self.store.read(spark, "metrics")
+        """Per (batch, host) fetch counts and success rate (SURVEY.md
+        D10), computed on read from the fetches table."""
+        fetches = self.fetches(spark)
+        return None if fetches is None else fetch_rate_metrics(fetches)
 
     def errors(self, spark: SparkSession) -> DataFrame | None:
         """on_error hook output across batches (roddy's OnError channel)."""
@@ -471,6 +460,8 @@ class Crawler:
                            visited_buckets=config.visited_buckets)
         self.robots_map = robots_map or {}
         self.fetcher = fetcher
+        # the keywords the fetcher accepts, resolved once
+        self._fetcher_params = set(inspect.signature(fetcher).parameters)
         self.max_batches = max_batches
         # User hook surface — the reference's callback registry
         # (roddy.go:360-483) as DataFrame→DataFrame transform slots, fired
@@ -540,17 +531,14 @@ class Crawler:
             batch = m["completed_batch"]
             admitted_count = m["admitted_count"]
             success_count = m["success_count"]
-            paging_count = m.get("paging_count", 0)
+            paging_count = m["paging_count"]
             batches = m["batches"]
             # roll back visited rows a killed batch wrote but never
             # committed (they'd mask the re-run's own re-admissions), and
             # orphaned cookie snapshots (they'd shadow the committed jar
             # in read_latest on a LATER resume)
-            store.rollback_visited(batch)
+            store.rollback_visited(spark, batch)
             store.rollback_table("cookies", batch)
-            if store.visited_buckets and \
-                    spark.catalog.tableExists(store._visited_table):
-                spark.catalog.refreshTable(store._visited_table)
             candidates = store.read(spark, "candidates", batch)
             pending = store.read(spark, "pending", batch)
             visited = store.read_visited(spark)
@@ -564,25 +552,10 @@ class Crawler:
             # The frontier-state counts/bytes are write-time Observation
             # values the completed batch already measured — the manifest
             # carries them, so a resume launches ZERO count/aggregate jobs
-            # (VERDICT r4 item 4). The fallbacks only fire for manifests
-            # written by older engine versions.
-            n_cand = m.get("next_candidates")
-            if n_cand is None:
-                n_cand = candidates.count() if candidates is not None else 0
-            n_pending = m.get("pending_n")
-            if n_pending is None:
-                n_pending = pending.count() if pending is not None else 0
-            pending_bytes = m.get("pending_bytes")
-            if pending_bytes is None:
-                # re-derive pending BYTES with one aggregate over the
-                # read-back pending table (same expression the write-time
-                # Observation uses) — exact, never the 64 B/row floor that
-                # under-gated fat-ctx broadcasts (ADVICE r3)
-                pending_bytes = 0
-                if n_pending:
-                    pending_bytes = int(pending.select(
-                        _row_bytes_agg(pending).alias("b")).first()["b"] or 0
-                        ) + 32 * n_pending
+            # (VERDICT r4 item 4).
+            n_cand = m["next_candidates"]
+            n_pending = m["pending_n"]
+            pending_bytes = m["pending_bytes"]
         else:
             if seeds is None:
                 raise ValueError("seeds required for a fresh crawl")
@@ -605,8 +578,8 @@ class Crawler:
             visited = None
             store.commit_manifest({
                 "completed_batch": 0, "admitted_count": 0,
-                "success_count": 0, "batches": [], "done": False,
-                "next_candidates": n_cand, "pending_n": 0,
+                "success_count": 0, "paging_count": 0, "batches": [],
+                "done": False, "next_candidates": n_cand, "pending_n": 0,
                 "pending_bytes": 0, "config": repr(cfg)})
         # visited filter: empty on a fresh store, rebuilt on resume
         bloom = refresh_visited_bloom(cfg, None, admitted_count,
@@ -676,9 +649,8 @@ class Crawler:
             # 3. fetch (the admitted rows are already durably visited);
             # error classification per F12 (ignored errors → NULL effective)
             obs_f = Observation(f"fetch_{batch}")
-            import inspect
             fkw = {}
-            fparams = inspect.signature(self.fetcher).parameters
+            fparams = self._fetcher_params
             if "frontier_rows" in fparams:
                 # known batch bound → broadcast-frontier fetch strategy
                 fkw["frontier_rows"] = n_admitted + n_pending
@@ -686,7 +658,7 @@ class Crawler:
                 # write-time byte observation gates the broadcast by SIZE,
                 # not just row count — fat-ctx frontiers take the SMJ path
                 # (VERDICT r2 item 6); after resume the pending component
-                # is re-aggregated from the store, so it is always exact.
+                # comes from the manifest, so it is always exact.
                 fkw["frontier_bytes"] = adm_bytes + pending_bytes
             if "cookies" in fparams:
                 # cookie-aware fetcher gets the CURRENT jar snapshot
@@ -745,11 +717,7 @@ class Crawler:
             success_count += n_ok
             paging_count += int(obs_f.get["paging"] or 0)
 
-            # 3b. per-partition lineage + fetch metrics (SURVEY.md D10)
-            from roddy_spark.streaming.events import fetch_rate_metrics
-            store.write(fetch_rate_metrics(fetched), "metrics", batch)
-
-            # 3b2. cookie write-back (K3, storage/storage.go:92-131):
+            # 3b. cookie write-back (K3, storage/storage.go:92-131):
             # set-cookie responses update the jar (last writer per host by
             # seq) and the jar is persisted for resume. The set-cookie
             # COUNT rode the fetches write; batches without any (the
@@ -770,7 +738,7 @@ class Crawler:
                     list(self.cookies.items()),
                     "host string, cookie string"), "cookies", batch)
 
-            # 3b3. user-selector element rows (S4 generality): reads the
+            # 3c. user-selector element rows (S4 generality): reads the
             # persisted fetches snapshot — nothing is refetched/reparsed
             # upstream, and bodies stay inside one Arrow pass
             if self.selectors:
@@ -782,7 +750,7 @@ class Crawler:
                     keep=("url_norm", "depth", "seq", "batch")),
                     "selected", batch)
 
-            # 3c. OnError slot (roddy.go:332-345): failed fetches → the
+            # 3d. OnError slot (roddy.go:332-345): failed fetches → the
             # durable errors table; reads the already-persisted fetches
             # snapshot, so nothing is recomputed
             if self.on_error is not None:
@@ -809,7 +777,7 @@ class Crawler:
                 if res is not None:
                     store.write(res, "scraped", batch)
 
-            # 5. metrics + snapshot commit. The manifest carries the
+            # 5. snapshot commit. The manifest carries the
             # NEXT-batch frontier-state numbers (all write-time Observation
             # values) so a resume replays them without any count/aggregate
             # job (VERDICT r4 item 4).

@@ -138,7 +138,7 @@ class FrontierIngest:
             self._admitted_total = m.get("admitted_count", 0)
             # a replayed epoch re-appends under the bucketed layout —
             # drop anything the manifest never acknowledged first
-            self.store.rollback_visited(m["completed_batch"])
+            self.store.rollback_visited(self.spark, m["completed_batch"])
         # fresh store → empty filter (bloom_mode=on); resume → rebuild
         # from the persisted visited hashes, like the batch loop
         self._bloom = refresh_visited_bloom(

@@ -11,8 +11,10 @@ Package the library and submit:
         --seeds http://h0.test/ --max-depth 3 --per-host-budget 64
 
 On a real cluster add ``--master`` / executor confs; the script uses the
-session spark-submit provides (it does NOT force local mode). ``--resume``
-continues from the checkpoint's last committed snapshot.
+session spark-submit provides (it does NOT force local mode). The
+checkpoint may be any path Spark can write (``hdfs://…``, ``file://…``):
+the store handles it through Hadoop FileSystem. ``--resume`` continues
+from the checkpoint's last committed snapshot.
 """
 
 from __future__ import annotations

@@ -161,3 +161,27 @@ def test_batch_overcap_bloom_delta_uses_distributed_build(
            sorted(expected.admitted, key=lambda a: a[2])]
     assert got == exp
     assert len(np.unique([g[2] for g in got])) == len(got)
+
+
+def test_metrics_computed_from_fetches(spark, web_fixture, tmp_path):
+    """``CrawlState.metrics()`` is the per-(batch, host) fetch count,
+    success count and success rate over the crawl's fetches rows
+    (SURVEY.md D10), computed on read; no metrics table is written."""
+    import os
+
+    _, pages_df, _ = web_fixture
+    ckpt = tmp_path / "metrics"
+    state = Crawler(spark, CrawlConfig(max_depth=3, per_host_budget=2),
+                    pages_df, str(ckpt)).run(["http://h0.test/",
+                                              "http://h1.test/"])
+    want: dict = {}
+    for r in state.fetches(spark).collect():
+        n, ok = want.get((r["batch"], r["host"]), (0, 0))
+        want[(r["batch"], r["host"])] = (n + 1, ok + int(r["success"]))
+    got = {(r["batch"], r["host"]): (r["n_fetched"], r["n_ok"],
+                                     r["success_rate"])
+           for r in state.metrics(spark).collect()}
+    assert len({b for b, _ in want}) > 1 and len(want) > 2
+    assert got == {k: (n, ok, round(ok / n, 4))
+                   for k, (n, ok) in want.items()}
+    assert "metrics" not in os.listdir(ckpt)

@@ -102,10 +102,11 @@ def test_resume_surfaces_corrupt_snapshot(spark, web, tmp_path):
     assert SnapshotStore(ckpt).manifest()["completed_batch"] == 1
 
 
-def test_rollback_visited_surfaces_unreadable_file(tmp_path):
-    """Bucketed rollback reads each file's batch statistics; a file it
-    cannot read raises instead of being skipped (a skipped file could keep
-    an uncommitted batch's rows)."""
+def test_rollback_visited_surfaces_unreadable_file(spark, tmp_path):
+    """Bucketed rollback scans the visited table for the files holding
+    rows of batches after the completed one; a file the scan cannot read
+    raises instead of being skipped (a skipped file could keep an
+    uncommitted batch's rows)."""
     import os
 
     from roddy_spark.plans.crawl import SnapshotStore
@@ -116,7 +117,7 @@ def test_rollback_visited_surfaces_unreadable_file(tmp_path):
                            "part-00000.parquet"), "wb") as f:
         f.write(b"not a parquet file")
     with pytest.raises(Exception, match="[Pp]arquet"):
-        store.rollback_visited(0)
+        store.rollback_visited(spark, 0)
 
 
 def test_filename_from_url(spark):
@@ -325,6 +326,36 @@ def test_resume_after_kill_during_first_batch(spark, web, tmp_path, buckets):
            full.visited(spark).orderBy("seq").collect()]
     assert got == exp and got, "resume after mid-batch kill diverged"
     assert state.success_count == full.success_count
+
+
+@pytest.mark.parametrize("buckets", [0, 8])
+def test_resume_on_uri_root(spark, web, tmp_path, monkeypatch, buckets):
+    """A ``file://`` URI root behaves like the plain path it names: a run
+    cut after batch 1 and resumed gives the same (url, depth, seq), counts
+    and successes as an uninterrupted plain-path run, and nothing of the
+    store lands under the working directory (every store path goes
+    through Hadoop FileSystem, as Spark's own writes do)."""
+    import os
+
+    _, pages_df = web
+    monkeypatch.chdir(tmp_path)
+    cfg = CrawlConfig(max_depth=3, per_host_budget=4,
+                      visited_buckets=buckets)
+    seeds = ["http://h0.test/"]
+    full = Crawler(spark, cfg, pages_df, str(tmp_path / "plain")).run(seeds)
+    uri = (tmp_path / "uri").as_uri()
+    assert uri.startswith("file:///")
+    Crawler(spark, cfg, pages_df, uri, max_batches=1).run(seeds)
+    state = Crawler(spark, cfg, pages_df, uri).run(resume=True)
+
+    def triples(st):
+        return [(r["url_norm"], r["depth"], r["seq"]) for r in
+                st.visited(spark).orderBy("seq").collect()]
+
+    assert triples(state) == triples(full) and triples(full)
+    assert state.admitted_count == full.admitted_count
+    assert state.success_count == full.success_count
+    assert not [e for e in os.listdir(tmp_path) if e.startswith("file:")]
 
 
 def test_cookie_writeback_lifecycle(spark, web, tmp_path):
