@@ -225,7 +225,13 @@ def bloom_prefilter(candidates: DataFrame, bloom: ShardedBloom,
     def maybe_seen(h: pd.Series) -> pd.Series:
         return pd.Series(bc.value.might_contain(h.to_numpy(dtype=np.int64)))
 
-    return candidates.withColumn("__maybe_seen", maybe_seen(F.col(hash_col)))
+    # The probe is a pure function of the hash, but marked nondeterministic
+    # so Catalyst keeps it where it is written: pushed through an upstream
+    # group-by on the hash (first_occurrence) it splits that aggregate into
+    # one shuffle per side of the split, and inferred across the anti-join
+    # it runs a Python pass over the whole visited table.
+    probe = maybe_seen.asNondeterministic()
+    return candidates.withColumn("__maybe_seen", probe(F.col(hash_col)))
 
 
 def dedup_against(candidates: DataFrame, visited: DataFrame | None,

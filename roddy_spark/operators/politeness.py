@@ -18,6 +18,10 @@ budget B the per-host rank can also short-circuit: rows are first cut to
 the top-B per (host, salt) slice — a correct upper bound since the final
 per-host top-B is a subset of the union of per-salt top-Bs — shrinking the
 host-window input from N_host to salt·B before the authoritative rank.
+
+``politeness_flags`` returns the pool as ONE frame with a fetch flag;
+``politeness_split``'s two sides are two filters of it, and a caller that
+persists the flagged frame (the crawl loop) runs the windows once for both.
 """
 
 from __future__ import annotations
@@ -26,12 +30,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def politeness_split(pool: DataFrame, per_host_budget: int,
-                     salt_buckets: int = 8) -> tuple[DataFrame, DataFrame]:
-    """pool (url_norm, url_hash, host, depth, priority, seq) →
-    (to_fetch, deferred). Budget 0 ⇒ everything fetches."""
+FETCH = "__fetch"
+
+
+def politeness_flags(pool: DataFrame, per_host_budget: int,
+                     salt_buckets: int = 8) -> DataFrame:
+    """pool + a boolean ``FETCH`` column: true for the rows released to
+    this batch's fetch, false for the deferred ones. One frame, so a
+    caller that persists it runs the politeness windows once for both
+    sides of the split. Budget 0 ⇒ every row fetches."""
     if not per_host_budget:
-        return pool, pool.limit(0)
+        return pool.withColumn(FETCH, F.lit(True))
 
     # Phase 1 — salted pre-cut: rank within (host, salt). A row ranked > B
     # inside its salt slice alone already has ≥ B same-host rows ahead of it
@@ -41,12 +50,26 @@ def politeness_split(pool: DataFrame, per_host_budget: int,
     pre = Window.partitionBy("host", salt).orderBy("priority", "seq")
     tagged = pool.withColumn("__pre", F.row_number().over(pre))
     survivors = tagged.filter(F.col("__pre") <= per_host_budget).drop("__pre")
-    cut_early = tagged.filter(F.col("__pre") > per_host_budget).drop("__pre")
+    cut_early = (tagged.filter(F.col("__pre") > per_host_budget)
+                 .drop("__pre").withColumn(FETCH, F.lit(False)))
 
     # Phase 2 — authoritative per-host rank over the bounded survivor set
     w = Window.partitionBy("host").orderBy("priority", "seq")
-    ranked = survivors.withColumn("__rank", F.row_number().over(w))
-    to_fetch = ranked.filter(F.col("__rank") <= per_host_budget).drop("__rank")
-    deferred = (ranked.filter(F.col("__rank") > per_host_budget)
-                .drop("__rank").unionByName(cut_early))
-    return to_fetch, deferred
+    ranked = survivors.withColumn(
+        FETCH, F.row_number().over(w) <= per_host_budget)
+    return ranked.unionByName(cut_early)
+
+
+def politeness_split(pool: DataFrame, per_host_budget: int,
+                     salt_buckets: int = 8) -> tuple[DataFrame, DataFrame]:
+    """pool (url_norm, url_hash, host, depth, priority, seq) →
+    (to_fetch, deferred): the two sides of ``politeness_flags``. Budget 0
+    ⇒ everything fetches."""
+    return split_flagged(politeness_flags(pool, per_host_budget,
+                                          salt_buckets))
+
+
+def split_flagged(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(to_fetch, deferred) filters of a ``politeness_flags`` frame."""
+    return (flagged.filter(F.col(FETCH)).drop(FETCH),
+            flagged.filter(~F.col(FETCH)).drop(FETCH))

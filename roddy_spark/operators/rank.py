@@ -13,11 +13,22 @@ collapses to ONE partition — a non-starter at 10^10 rows. Instead:
 The order columns must form a total order (unique tuples); the result is
 exactly the global sort rank regardless of where range boundaries fall, so
 nondeterministic boundary sampling cannot change the output.
+
+Width 1 (``num_partitions=1``, what the crawl loop asks for below 20k
+candidates) is the one case where the single-partition window IS the
+distributed plan: ``seq = row_number() OVER (ORDER BY order_cols) + start -
+1``. It is the same rank (the order is total) with no persist, no count job
+and no Python pass, so it launches no job at call time. The window plans
+its own ``Exchange SinglePartition``: everything upstream of it (the
+admission filters, ``first_occurrence``, the visited anti-join and its
+bucketed scan) still runs at its own width, and only the ranked rows meet
+in one task. Spark logs "No Partition Defined for Window operation" there;
+that WARN is expected.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -41,6 +52,11 @@ def ordered_seq(df: DataFrame, order_cols: list[str], seq_col: str = "seq",
     ``ORDER BY order_cols`` (which must be a total order)."""
     spark = df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if n == 1:
+        # no coalesce: it would pull the whole upstream stage into the one
+        # task; the window's own exchange keeps the upstream parallel
+        rank = F.row_number().over(Window.orderBy(*order_cols))
+        return df.withColumn(seq_col, rank.cast("long") + F.lit(start - 1))
     # Persist the INPUT first: repartitionByRange runs a boundary-sampling
     # pass over its child before the real shuffle, and the size-count job
     # below is a further pass — without this cache the (expensive,

@@ -12,17 +12,26 @@ manifest — the same layout/contract, pluggable behind ``SnapshotStore``,
 whose paths all go through Hadoop ``FileSystem`` (roddy_spark/fs.py).
 
 Per-batch dataflow (each arrow is declarative DataFrame API; Python runs
-only in Arrow passes: canonicalize, robots, link extraction):
+only in Arrow passes: canonicalize, robots, bloom probe, link extraction):
 
   candidates ─ admit(admission_filters → in-batch dedup → bloom+anti-join
-               → seq) ─┐
+               → seq) ─► visited write, read back ─┐
   pending ────────────────────────────────────────────────────────────► pool
-  pool ─ politeness_split(per-host window budget) ─► to_fetch + deferred
-  to_fetch ─ fetch(join vs pages) ─► fetched  (mark-at-admission already
-                                               persisted BEFORE this step)
+  pool ─ politeness_flags(per-host window budget) ─► flagged (persisted)
+  flagged ─ NOT fetch ─► deferred ─► pending write (fills the cache)
+  flagged ─ fetch ─► to_fetch ─ fetch(join vs pages) ─► fetches write
+                     (mark-at-admission already persisted BEFORE this step;
+                     the cache is released after the fetches write)
   fetched ─ expand = link_rows(linkable pages ─ extract_links_fast ─
             <base href> ─ resolve+canonicalize) ─►
       next candidates (depth+1; rel="next" keeps depth, priority 0 — D8)
+
+Below 20k candidates ``seq`` is a one-partition window (operators/rank.py),
+so admission runs no job of its own; the politeness windows run once per
+batch, in the pending write. The fetches and candidates writes repartition
+to a data-sized width only when that width is above 1 (mid-size batches);
+a small batch is written as its stage leaves it, with no exchange job. A
+small batch runs at most 15 Spark jobs (pinned by tests/test_crawl_e2e.py).
 
 ``admission_filters`` and ``link_rows`` are also the DFS fixpoint's
 filter and link steps (plans/dfs.py): one policy for both visit orders.
@@ -52,12 +61,18 @@ from roddy_spark.fetch import fetch_join
 from roddy_spark.functions import urls as U
 from roddy_spark.operators.admission import admit
 from roddy_spark.operators.dedup import refresh_visited_bloom
-from roddy_spark.operators.politeness import politeness_split
+from roddy_spark.operators.politeness import (politeness_flags,
+                                              split_flagged)
 from roddy_spark.operators.rank import release_rank_caches
 from roddy_spark.streaming.events import fetch_rate_metrics
 
 PRIORITY_PAGING = 0
 PRIORITY_CHILD = 1
+
+# the manifest fields a crawl resume reads: the last committed batch's
+# frontier state, written by every Crawler commit (seed commit included)
+FRONTIER_FIELDS = ("next_candidates", "pending_n", "pending_bytes",
+                   "paging_count")
 
 # Hook detach semantics (reference: roddy.go:404-422 On*Detach +
 # callback_options.go wrapper hooks): a registered hook can UNREGISTER
@@ -120,7 +135,15 @@ class SnapshotStore:
     per-batch visited anti-join with NO Exchange (and no sort) on the
     visited side; only the batch-sized candidate side is shuffled. This is
     the §7.4.1 fix: at 10^10 visited rows the alternative re-shuffles the
-    whole history every micro-batch."""
+    whole history every micro-batch.
+
+    Read schema: ``write`` records each table's ``df.schema`` and ``read``
+    hands it to ``spark.read.schema``, so a read of a table this instance
+    wrote runs no footer-inference job. Spark's file sources read any given
+    schema as nullable at every depth, so a not-null claim of the last
+    written frame is never asserted over older batches' files. A table
+    this instance has not written (a resume, or a fresh store over an old
+    root) is inferred from its files."""
 
     def __init__(self, root: str, visited_buckets: int = 0):
         self.root = root.rstrip("/")
@@ -131,6 +154,8 @@ class SnapshotStore:
         # rs_visited_<uuid> definitions in a long-lived session (ADVICE r2)
         digest = hashlib.sha1(fs.qualify(root).encode()).hexdigest()
         self._visited_table = f"rs_visited_{digest[:12]}"
+        # table → schema of its last write, for inference-free reads
+        self._schemas: dict[str, StructType] = {}
 
     # -- bucketed visited table ----------------------------------------
     def _visited_path(self) -> str:
@@ -232,6 +257,7 @@ class SnapshotStore:
 
     def write(self, df: DataFrame, table: str, batch: int) -> None:
         df.write.mode("overwrite").parquet(self.path(table, batch))
+        self._schemas[table] = df.schema
 
     def _batches(self, table: str) -> list[int]:
         """Batch numbers with a snapshot directory of ``table``."""
@@ -255,7 +281,9 @@ class SnapshotStore:
             paths = [self.path(table, b) for b in sorted(self._batches(table))]
             if not paths:
                 return None
-        return spark.read.parquet(*paths)
+        schema = self._schemas.get(table)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*paths)
 
     def rollback_table(self, table: str, completed: int) -> None:
         """Delete ``table`` snapshots written by batches > ``completed`` —
@@ -299,10 +327,7 @@ class CrawlState:
 
     def visited(self, spark: SparkSession) -> DataFrame:
         df = self.store.read_visited(spark)
-        if df is None:
-            return _empty_visited(spark)
-        return df.drop("batch") if "batch" in df.columns and \
-            self.store.visited_buckets else df
+        return _empty_visited(spark) if df is None else df.drop("batch")
 
     def fetches(self, spark: SparkSession) -> DataFrame:
         return self.store.read(spark, "fetches")
@@ -528,6 +553,13 @@ class Crawler:
         spark, store, cfg = self.spark, self.store, self.config
         m = store.manifest() if resume else None
         if m:
+            missing = [k for k in FRONTIER_FIELDS if k not in m]
+            if missing:
+                raise ValueError(
+                    f"cannot resume the crawl at {store.root}: its manifest "
+                    f"has no {', '.join(missing)}; the store was not "
+                    "written by Crawler (a FrontierIngest store holds "
+                    "visited rows only)")
             batch = m["completed_batch"]
             admitted_count = m["admitted_count"]
             success_count = m["success_count"]
@@ -625,13 +657,16 @@ class Crawler:
 
             # 2. politeness: pending ∪ newly admitted → fetch now vs defer.
             # With no per-host budget nothing is ever deferred — skip the
-            # pending table's IO entirely.
-            obs_def = None
+            # pending table's IO entirely. The flagged pool is persisted so
+            # its windows run once: the pending write fills the cache and
+            # the fetch reads its to_fetch side (several plan branches).
+            obs_def = flagged = None
             if cfg.per_host_budget:
                 pool = admitted if pending is None else (
                     pending.select(*admitted.columns).unionByName(admitted))
-                to_fetch, deferred = politeness_split(
-                    pool, cfg.per_host_budget, cfg.salt_buckets)
+                flagged = politeness_flags(
+                    pool, cfg.per_host_budget, cfg.salt_buckets).persist()
+                to_fetch, deferred = split_flagged(flagged)
                 obs_def = Observation(f"def_{batch}")
                 store.write(deferred.observe(
                     obs_def, F.count(F.lit(1)).alias("n"),
@@ -663,9 +698,6 @@ class Crawler:
             if "cookies" in fparams:
                 # cookie-aware fetcher gets the CURRENT jar snapshot
                 fkw["cookies"] = dict(self.cookies)
-            # fetch consumes to_fetch in multiple plan branches (broadcast
-            # build / hits / misses) — persist so politeness runs once
-            to_fetch = to_fetch.persist()
             fetched = (self.fetcher(to_fetch, self.pages, **fkw)
                        .withColumn("batch", F.lit(batch)))
             err = F.when(F.col("success"), F.lit(None)).otherwise(
@@ -699,18 +731,18 @@ class Crawler:
                     F.sum(F.col("set_cookie").isNotNull().cast("long"))
                     .alias("n_set_cookie"))
             fetched = fetched.observe(obs_f, *f_metrics)
-            # fetches feed the HTML-parse stage next — SMALL batches are
-            # narrowed to a data-sized width (AQE would otherwise coalesce
-            # 2KB-html batches into ONE partition, or tiny batches would
-            # fan out to full cluster width, multiplying fixed Arrow/python
-            # task overhead). LARGE batches skip this: repartitioning
-            # body-laden rows is a full shuffle of the batch's HTML, and
-            # the natural fetch-stage partitioning is already wide.
+            # fetches feed the HTML-parse stage next. A MID-SIZE batch is
+            # spread to a data-sized width: as the fetch stage leaves it
+            # (AQE coalesces 2KB-html shuffles) it lands in one file and
+            # the parse runs in one task. Width 1 keeps the stage's own
+            # output (a repartition would be an exchange job for nothing),
+            # and a LARGE batch's fetch stage is already wide.
             w = self._width(max(n_admitted, n_pending), 5_000)
-            if w < self.spark.sparkContext.defaultParallelism:
+            if 1 < w < self.spark.sparkContext.defaultParallelism:
                 fetched = fetched.repartition(w)
             store.write(fetched, "fetches", batch)
-            to_fetch.unpersist()
+            if flagged is not None:
+                flagged.unpersist()
             fetched = store.read(spark, "fetches", batch)
             n_fetched = int(obs_f.get["n"])
             n_ok = int(obs_f.get["ok"] or 0)
@@ -763,9 +795,13 @@ class Crawler:
             allow_paging = not (cfg.max_page_num
                                 and paging_count >= cfg.max_page_num)
             obs_c = Observation(f"cand_{batch}")
-            store.write(expand(fetched, allow_paging)
-                        .repartition(self._width(n_fetched * 8))
-                        .observe(obs_c, F.count(F.lit(1)).alias("n")),
+            # next batch's admission UDFs scan these files: a width above
+            # 1 spreads them, width 1 keeps the parse stage's output
+            cand = expand(fetched, allow_paging)
+            w = self._width(n_fetched * 8)
+            if w > 1:
+                cand = cand.repartition(w)
+            store.write(cand.observe(obs_c, F.count(F.lit(1)).alias("n")),
                         "candidates", batch)
             n_next = int(obs_c.get["n"])
 
@@ -843,7 +879,8 @@ class Crawler:
         A frontier batch is often far smaller than the cluster; running its
         pandas-UDF stages at full shuffle width just multiplies fixed
         per-task Arrow/python overhead (measured 4x slowdown at local[32]
-        on 2k-row batches). Counts are free — they ride on the previous
-        batch's write Observations."""
+        on 2k-row batches), and below 20k candidates width 1 takes
+        ``ordered_seq``'s job-free window rank. Counts are free — they
+        ride on the previous batch's write Observations."""
         cores = self.spark.sparkContext.defaultParallelism
         return max(1, min(cores, rows // rows_per_partition + 1))

@@ -73,7 +73,11 @@ _ORDER_COLS = ("priority", "__src_file", "__src_ridx")
 
 
 class FrontierIngest:
-    """Continuous candidate intake into a crawl's visited/admitted store.
+    """Continuous candidate intake into a visited store: it fills the
+    visited table (and a manifest of its own epochs) only. It writes no
+    candidates or pending table and none of the crawl loop's frontier
+    fields, so its store is not a resume point for ``Crawler.run``, which
+    refuses it with a ``ValueError``.
 
     ``run_available_now`` drains everything currently in the source
     directory and stops (deterministic for tests/benches); a production

@@ -185,3 +185,64 @@ def test_metrics_computed_from_fetches(spark, web_fixture, tmp_path):
     assert got == {k: (n, ok, round(ok / n, 4))
                    for k, (n, ok) in want.items()}
     assert "metrics" not in os.listdir(ckpt)
+
+
+def test_crawl_batch_job_budget(spark, web_fixture, tmp_path, monkeypatch):
+    """Each micro-batch of a crawl with a per-host budget, deferral and
+    the visited bloom runs at most 15 Spark jobs, and a read of a table
+    the store wrote runs none (the store reads with the schema it wrote,
+    so there is no footer-inference job). Jobs are grouped per batch by
+    switching the job group at each manifest commit."""
+    import uuid
+
+    from roddy_spark.plans.crawl import SnapshotStore
+
+    _, pages_df, _ = web_fixture
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    commits, reads = [], []
+    current = [f"{tag}-c0"]
+
+    def set_group(g):
+        sc.setJobGroup(g, g)
+
+    real_commit = SnapshotStore.commit_manifest
+    real_read = SnapshotStore.read
+
+    def commit(self, m):
+        real_commit(self, m)
+        commits.append(m)
+        current[0] = f"{tag}-c{len(commits)}"
+        set_group(current[0])
+
+    def read(self, spark_, table, batch=None):
+        g = f"{tag}-r{len(reads)}"
+        reads.append((table, g))
+        set_group(g)
+        try:
+            return real_read(self, spark_, table, batch)
+        finally:
+            set_group(current[0])
+
+    monkeypatch.setattr(SnapshotStore, "commit_manifest", commit)
+    monkeypatch.setattr(SnapshotStore, "read", read)
+    config = CrawlConfig(max_depth=3, per_host_budget=2, bloom_mode="on")
+    seeds = ["http://h0.test/", "http://h0.test/p/1", "http://h0.test/p/2",
+             "http://h1.test/"]
+    set_group(current[0])
+    try:
+        state = Crawler(spark, config, pages_df, str(tmp_path / "jobs"),
+                        max_batches=2).run(seeds)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def jobs(group):
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # commits: the seed, one per batch, then the final "done" flip
+    assert len(state.batches) == 2 and len(commits) == 4
+    assert all(m["pending_n"] > 0 for m in commits[1:3]), "no deferral"
+    per_batch = [jobs(f"{tag}-c{k}") for k in (1, 2)]
+    assert all(0 < n <= 15 for n in per_batch), per_batch
+    read_jobs = {g: (t, jobs(g)) for t, g in reads}
+    assert reads and all(n == 0 for _, n in read_jobs.values()), read_jobs

@@ -761,3 +761,33 @@ def test_gopher_line_stats(spark):
     assert got[3]["line_repetitive"]
     assert got[4]["n_lines"] == 3
     assert got[4]["dup_line_frac"] == pytest.approx(1 / 3)
+
+
+@pytest.mark.parametrize("start", [0, 7])
+def test_ordered_seq_width_one_matches_range_path(spark, start):
+    """Width 1 (the single window rank) and width 4 (range partition +
+    per-partition offsets) give identical ``seq`` on rows that tie on all
+    but the last order column, from any ``start``, and on empty input."""
+    from roddy_spark.operators.rank import (ordered_seq,
+                                            release_rank_caches)
+
+    df = spark.range(0, 60).select(
+        F.lit(1).alias("priority"), (F.col("id") % 3).alias("parent_seq"),
+        (59 - F.col("id")).alias("pos"), F.col("id").alias("row"))
+    order = ["priority", "parent_seq", "pos"]
+
+    def seqs(frame, n):
+        out = ordered_seq(frame, order, "seq", start=start,
+                          num_partitions=n)
+        got = sorted((r["row"], r["seq"]) for r in out.collect())
+        release_rank_caches()
+        return got
+
+    one, four = seqs(df, 1), seqs(df, 4)
+    assert one == four
+    assert sorted(s for _, s in one) == list(range(start, start + 60))
+    # the rank follows the ORDER BY, not the input order
+    first = min(one, key=lambda t: t[1])[0]
+    assert first == 57  # parent_seq 0 with the smallest pos
+    empty = df.limit(0)
+    assert seqs(empty, 1) == seqs(empty, 4) == []

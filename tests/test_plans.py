@@ -171,6 +171,56 @@ def test_bucketed_antijoin_stage_flat_as_visited_grows(spark, tmp_path):
                        str(64 * 1024 * 1024))
 
 
+def test_width_one_admit_keeps_antijoin_parallel(spark, tmp_path):
+    """At width 1 ``ordered_seq`` is an un-partitioned window. Its input
+    must reach it through an ``Exchange SinglePartition`` planned above
+    the bucketed visited anti-join, so the join (and the visited scan,
+    which has no exchange of its own) runs at bucket width; only the
+    ranked rows meet in one task. A coalesce to one partition would pull
+    the whole join stage, visited scan included, into a single task."""
+    from roddy_spark.config import CrawlConfig
+    from roddy_spark.functions import urls as U
+    from roddy_spark.operators.admission import admit
+    from roddy_spark.plans.crawl import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "ckpt_w1"), visited_buckets=8)
+    url = F.concat(F.lit("http://h0.test/p/"), F.col("id").cast("string"))
+    store.write_visited(spark.range(0, 1000).select(
+        url.alias("url_norm"), U.hash_of(url).alias("url_hash"),
+        F.lit("h0.test").alias("host"), F.lit(1).alias("depth"),
+        F.lit(1).alias("priority"), F.col("id").alias("seq"),
+        F.create_map().cast("map<string,string>").alias("ctx"),
+        F.lit(1).alias("batch")), 1)
+    cand = spark.range(0, 300).select(
+        F.concat(F.lit("http://h0.test/p/"),
+                 (F.col("id") * 7).cast("string")).alias("url_norm"),
+        F.lit(2).alias("depth"), F.lit(1).alias("priority"),
+        (F.col("id") % 5).alias("parent_seq"),
+        F.col("id").cast("int").alias("pos"))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = admit(cand, CrawlConfig(), store.read_visited(spark),
+                    admitted_so_far=1000, num_partitions=1)
+        lines = plan_of(out, "simple").splitlines()
+        p = "\n".join(lines)
+        assert "Coalesce" not in p, p
+
+        def at(op):
+            return next(i for i, ln in enumerate(lines) if op in ln)
+
+        # top-down: the window, then its single-partition exchange, then
+        # the anti-join over the bucketed visited scan
+        assert (at("Window [") < at("Exchange SinglePartition")
+                < at("SortMergeJoin")), p
+        assert "Bucketed: true" in plan_of(out), p
+        got = out.collect()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                       str(64 * 1024 * 1024))
+    # ids 0..142 (7·id < 1000) are visited; 143..299 are admitted
+    assert sorted(r["seq"] for r in got) == list(range(1000, 1157))
+
+
 def test_fetch_join_byte_bound_takes_smj_path(spark, monkeypatch):
     """The broadcast-frontier decision is gated by BYTES as well as rows
     (VERDICT r2 item 6): a small-row-count frontier whose observed bytes

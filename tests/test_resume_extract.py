@@ -120,6 +120,37 @@ def test_rollback_visited_surfaces_unreadable_file(spark, tmp_path):
         store.rollback_visited(spark, 0)
 
 
+def test_recorded_read_schema_keeps_older_batches_nulls(spark, tmp_path):
+    """``SnapshotStore.read`` hands the last write's schema to the reader.
+    A frame whose nested fields claim not-null must not hide the nulls an
+    earlier batch (written by another store instance) holds there: the
+    read schema is nullable at every depth."""
+    from pyspark.sql import functions as F
+
+    from roddy_spark.plans.crawl import SnapshotStore
+
+    root = str(tmp_path / "schema_st")
+    base = spark.range(1).select(F.col("id").alias("seq"))
+    SnapshotStore(root).write(base.select(
+        "seq", F.struct(F.lit(None).cast("int").alias("x")).alias("s"),
+        F.create_map(F.lit("k"), F.lit(None).cast("string")).alias("ctx"),
+        F.array(F.lit(None).cast("int")).alias("a")), "t", 1)
+    store = SnapshotStore(root)
+    strict = base.select(
+        (F.col("seq") + 1).alias("seq"),
+        F.struct(F.lit(1).alias("x")).alias("s"),
+        F.create_map(F.lit("k"), F.lit("v")).alias("ctx"),
+        F.array(F.lit(2)).alias("a"))
+    assert not strict.schema["s"].dataType["x"].nullable
+    store.write(strict, "t", 2)
+    got = store.read(spark, "t")
+    assert got.schema == spark.read.parquet(store.path("t")).drop(
+        "batch").schema
+    nulls = got.filter(F.col("s.x").isNull() & F.col("ctx")["k"].isNull()
+                       & F.col("a")[0].isNull())
+    assert [r["seq"] for r in nulls.collect()] == [0]
+
+
 def test_filename_from_url(spark):
     """U6 golden triples (util_test.go:24-40 analog)."""
     from roddy_spark.functions.urls import filename_from_url
@@ -559,3 +590,22 @@ def test_resume_runs_no_count_jobs(spark, web, tmp_path, monkeypatch):
     exp = [(r["url_norm"], r["seq"]) for r in
            full.visited(spark).orderBy("seq").collect()]
     assert got == exp
+
+
+@pytest.mark.parametrize("buckets", [0, 4])
+def test_visited_columns_same_for_both_layouts(spark, web, tmp_path,
+                                               buckets):
+    """``CrawlState.visited`` has the columns of ``_empty_visited`` (no
+    ``batch``) whether the visited table is plain or bucketed, so the CSV
+    export has the same header for both."""
+    from roddy_spark.plans.crawl import _empty_visited
+
+    _, pages_df = web
+    state = Crawler(spark, CrawlConfig(max_depth=1, visited_buckets=buckets),
+                    pages_df, str(tmp_path / "cols")).run(["http://h0.test/"])
+    assert state.visited(spark).columns == _empty_visited(spark).columns
+    csv_path = str(tmp_path / "cols_csv")
+    state.export_visited(spark, csv_path, fmt="csv")
+    header = spark.read.option("header", "true").csv(csv_path).columns
+    assert header == ["url_norm", "url_hash", "host", "depth", "priority",
+                      "seq"]

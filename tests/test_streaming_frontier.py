@@ -252,3 +252,22 @@ def test_intake_oversized_epoch_uses_distributed_delta(spark, tmp_path,
     hashes = np.array([r["url_hash"] for r in ing.visited().collect()],
                       dtype=np.int64)
     assert ing._bloom.might_contain(hashes).all()
+
+
+def test_crawl_resume_rejects_intake_store(spark, tmp_path):
+    """A FrontierIngest store holds visited rows only: its manifest has
+    none of the crawl loop's frontier fields, so resuming a crawl over it
+    raises a ValueError that names them, instead of a KeyError."""
+    from roddy_spark.plans.crawl import Crawler
+
+    intake, store = str(tmp_path / "intake_x"), str(tmp_path / "store_x")
+    cfg = CrawlConfig(max_depth=2)
+    _write_wave(spark, intake, [("http://h0.test/one", 1, 1)])
+    assert FrontierIngest(spark, cfg, intake, store,
+                          str(tmp_path / "sckpt_x")).run_available_now() == 1
+    pages = spark.createDataFrame([], "url string")
+    with pytest.raises(ValueError, match="not written by Crawler") as err:
+        Crawler(spark, cfg, pages, store).run(resume=True)
+    for field in ("next_candidates", "pending_n", "pending_bytes",
+                  "paging_count"):
+        assert field in str(err.value)
