@@ -69,9 +69,14 @@ def fetch_join(to_fetch: DataFrame, pages: DataFrame,
         # set, which is batch-bounded (hits ⊆ to_fetch) — broadcastable at
         # any web size. Anti-joining against pages.url instead would build/
         # shuffle a web-sized key side every batch. The hits sub-plan is
-        # re-evaluated here, but that is one extra column-pruned pages scan
-        # probing the SAME frontier broadcast (AQE reuses the exchange) —
-        # cheap, and nothing web-sized ever crosses the wire.
+        # re-evaluated here, pruned to url_norm, so its frontier broadcast
+        # carries url_norm only: a different exchange from the hits join's,
+        # which AQE does not reuse. Each batch thus broadcasts the frontier
+        # twice (two small jobs over the same frontier rows) plus one extra
+        # column-pruned pages scan; nothing web-sized crosses the wire.
+        # Keeping every frontier column on the anti-join side would make
+        # the two exchanges equal, but the map-typed ``ctx`` column cannot
+        # be a join key.
         misses = to_fetch.join(
             F.broadcast(hits.select("url_norm")), "url_norm", "left_anti")
         for f in FETCH_RESULT_EXTRA.fields:

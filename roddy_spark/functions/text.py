@@ -2,10 +2,21 @@
 tokenization, shingles, cross-engine hashing, quality scoring, language-ID
 heuristics, and document fingerprinting.
 
-Everything here is pure Spark SQL expressions (JVM-side, whole-stage
-codegen) — no Python UDFs — and each has an exact ANSI-SQL twin runnable by
-DuckDB (see __spark_entry__.oracle_sql), which is why the hash primitive is
-``h32`` (md5-prefix) rather than xxhash64 (absent in DuckDB).
+Everything here is pure Spark SQL expressions (JVM-side) — no Python UDFs
+except ``nfc`` — and each has an exact ANSI-SQL twin runnable by DuckDB (see
+__spark_entry__.oracle_sql), which is why the hash primitive is ``h32``
+(md5-prefix) rather than xxhash64 (absent in DuckDB).
+
+Cost rule for the token-list kernels. In Spark 4.1 every higher-order
+function (``transform``, ``filter``, ``aggregate``, ``zip_with``) is a
+``CodegenFallback``: it runs interpreted, row by row, and subexpression
+elimination does not look inside it (neither its lambda body nor its
+arguments); of a ``when`` it shares only the first condition and what
+every branch evaluates. So an expression named k times is evaluated k
+times: ``tokens(c)`` inside a ``transform`` lambda re-tokenizes the
+document once per element. Each kernel therefore takes its token list
+once, bound by ``let`` as the argument of a one-element ``transform`` (or
+read from a real column), and refers only to that binding afterwards.
 """
 
 from __future__ import annotations
@@ -36,6 +47,12 @@ def h32(c: Column | str) -> Column:
     return F.conv(F.substring(F.md5(_col(c)), 1, 8), 16, 10).cast("long")
 
 
+def let(value: Column, body) -> Column:
+    """``body(v)`` with ``v`` bound to ``value``, which is evaluated once per
+    row: the lambda variable of a one-element ``transform``."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def tokens(c: Column | str) -> Column:
     """Whitespace tokens of lowercased text (empty tokens removed)."""
     return F.filter(F.split(F.lower(_col(c)), r"\s+"), lambda t: t != "")
@@ -61,13 +78,21 @@ def bpe_ish_token_count(c: Column | str) -> Column:
 def word_ngrams(c: Column | str, n: int = 2) -> Column:
     """ALL word n-grams in order (NOT deduplicated — repetition analysis
     needs every occurrence; dedup/Jaccard wants ``word_shingles``). Docs
-    shorter than n tokens yield an empty array."""
-    t = tokens(c)
-    return F.when(
-        F.size(t) >= n,
-        F.transform(F.sequence(F.lit(0), F.size(t) - n),
-                    lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)))
-    ).otherwise(F.array().cast("array<string>"))
+    shorter than n tokens yield an empty array.
+
+    Linear in the token count: the n-grams are a ``zip_with`` fold of the n
+    shifted slices ``t[k+1 .. k+size-n+1]``. The ``size >= n`` guard stays,
+    since ``slice`` rejects a negative length."""
+    def grams(t: Column) -> Column:
+        width = F.size(t) - n + 1
+        out = F.slice(t, 1, width)
+        for k in range(1, n):
+            out = F.zip_with(out, F.slice(t, k + 1, width),
+                             lambda a, b: F.concat_ws(" ", a, b))
+        return F.when(F.size(t) >= n, out).otherwise(
+            F.array().cast("array<string>"))
+
+    return let(tokens(c), grams)
 
 
 def word_shingles(c: Column | str, n: int = 3) -> Column:
@@ -76,11 +101,20 @@ def word_shingles(c: Column | str, n: int = 3) -> Column:
     return F.array_distinct(word_ngrams(c, n))
 
 
-def stopword_ratio(c: Column | str) -> Column:
-    t = tokens(c)
-    stop = F.filter(t, lambda x: x.isin(*STOPWORDS))
+def _count_in(t: Column, words: tuple[str, ...]) -> Column:
+    """How many tokens of the list ``t`` are among ``words``."""
+    return F.size(F.filter(t, lambda x: x.isin(*words)))
+
+
+def _stopword_ratio(t: Column) -> Column:
     return F.when(F.size(t) > 0,
-                  F.size(stop) / F.size(t)).otherwise(F.lit(0.0))
+                  _count_in(t, STOPWORDS) / F.size(t)).otherwise(F.lit(0.0))
+
+
+def _mean_word_len(t: Column) -> Column:
+    return F.when(F.size(t) > 0,
+                  F.aggregate(t, F.lit(0), lambda acc, x: acc + F.length(x))
+                  / F.size(t)).otherwise(F.lit(0.0))
 
 
 def punct_ratio(c: Column | str) -> Column:
@@ -91,41 +125,38 @@ def punct_ratio(c: Column | str) -> Column:
                   ).otherwise(F.lit(0.0))
 
 
-def mean_word_len(c: Column | str) -> Column:
-    t = tokens(c)
-    return F.when(F.size(t) > 0,
-                  F.aggregate(t, F.lit(0), lambda acc, x: acc + F.length(x))
-                  / F.size(t)).otherwise(F.lit(0.0))
-
-
 def quality_score(c: Column | str) -> Column:
     """Composite [0,1] quality heuristic for training-data filtering:
     rewards mid-length docs, plausible word lengths and some stopwords;
     punishes punctuation soup. Deterministic arithmetic only."""
     s = _col(c)
-    length_term = F.least(F.length(s) / F.lit(500.0), F.lit(1.0))
-    wordlen = mean_word_len(s)
-    wordlen_term = F.when((wordlen >= 3) & (wordlen <= 10), F.lit(1.0)) \
-                    .otherwise(F.lit(0.5))
-    stop_term = F.least(stopword_ratio(s) * 4.0, F.lit(1.0))
-    punct_term = F.lit(1.0) - F.least(punct_ratio(s) * 5.0, F.lit(1.0))
-    return F.round((length_term + wordlen_term + stop_term + punct_term)
-                   / 4.0, 4)
+
+    def score(t: Column) -> Column:
+        length_term = F.least(F.length(s) / F.lit(500.0), F.lit(1.0))
+        wordlen = _mean_word_len(t)
+        wordlen_term = F.when((wordlen >= 3) & (wordlen <= 10),
+                              F.lit(1.0)).otherwise(F.lit(0.5))
+        stop_term = F.least(_stopword_ratio(t) * 4.0, F.lit(1.0))
+        punct_term = F.lit(1.0) - F.least(punct_ratio(s) * 5.0, F.lit(1.0))
+        return F.round((length_term + wordlen_term + stop_term + punct_term)
+                       / 4.0, 4)
+
+    return let(tokens(s), score)
 
 
 def lang_id(c: Column | str) -> Column:
     """Marker-word language guess: the language whose markers occur most
-    (ties broken by fixed language order); 'und' when nothing matches."""
-    t = tokens(c)
-    best = F.lit("und")
-    best_n = F.lit(0)
-    for lang in ("en", "de", "es", "fr", "zh"):
-        markers = LANG_MARKERS[lang]
-        n = F.size(F.filter(t, lambda x: x.isin(*markers)))
-        better = n > best_n
-        best = F.when(better, F.lit(lang)).otherwise(best)
-        best_n = F.when(better, n).otherwise(best_n)
-    return best
+    (ties broken by the fixed ``LANG_MARKERS`` order); 'und' when nothing
+    matches (null text included)."""
+    def label(t: Column) -> Column:
+        counts = {lang: _count_in(t, m) for lang, m in LANG_MARKERS.items()}
+        top = F.greatest(*counts.values())
+        first = F  # F.when for the first language, Column.when after
+        for lang, n in counts.items():
+            first = first.when(n == top, F.lit(lang))
+        return F.when(top > 0, first).otherwise(F.lit("und"))
+
+    return let(tokens(c), label)
 
 
 def fingerprint(c: Column | str) -> Column:
@@ -141,17 +172,21 @@ def simhash16(c: Column | str) -> Column:
     """16-bit SimHash over whitespace tokens using h32 token hashes:
     bit j is set iff sum over tokens of sign(bit_j(h32(token))) > 0.
     Small fixed width keeps the SQL twin tractable; near-dup candidates
-    join on equal simhash (or banded halves for hamming ≤ k)."""
-    t = tokens(c)
-    out = F.lit(0).cast("long")
-    for j in range(16):
-        contrib = F.aggregate(
-            t, F.lit(0),
-            lambda acc, x: acc + F.when(
-                F.shiftright(h32(x), j).bitwiseAND(F.lit(1)) == 1,
-                F.lit(1)).otherwise(F.lit(-1)))
-        out = out + F.when(contrib > 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return out
+    join on equal simhash (or banded halves for hamming ≤ k). Each token is
+    hashed once; the 16 per-bit sums read the bound hash list."""
+    def bits(hs: Column) -> Column:
+        out = F.lit(0).cast("long")
+        for j in range(16):
+            contrib = F.aggregate(
+                hs, F.lit(0),
+                lambda acc, h: acc + F.when(
+                    F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1,
+                    F.lit(1)).otherwise(F.lit(-1)))
+            out = out + F.when(contrib > 0, F.lit(1 << j)).otherwise(
+                F.lit(0))
+        return out
+
+    return let(F.transform(tokens(c), h32), bits)
 
 
 # PII scrubbing (pipeline canon: C4/RefinedWeb redact contact details

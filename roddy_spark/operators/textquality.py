@@ -110,15 +110,20 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
     Docs too short to form an n-gram come out 0.0/0.0/false (too-short is
     a LENGTH rule's business, not a repetition rule's).
     """
-    grams = F.array_sort(T.word_ngrams(text_col, n))
-    total = F.size(grams)
-    st = _run_length_stats(grams)
-    denom = F.greatest(total, F.lit(1))
-    out = df.select(
-        F.col(id_col),
-        total.cast("long").alias("total_ngrams"),
-        (st["max_c"] / denom).cast("double").alias("top_ngram_frac"),
-        (st["dup_c"] / denom).cast("double").alias("dup_ngram_frac"))
+    def stats(grams: Column) -> Column:
+        total = F.size(grams)
+        st = _run_length_stats(grams)
+        denom = F.greatest(total, F.lit(1))
+        return F.struct(
+            total.cast("long").alias("total_ngrams"),
+            (st["max_c"] / denom).cast("double").alias("top_ngram_frac"),
+            (st["dup_c"] / denom).cast("double").alias("dup_ngram_frac"))
+
+    # the sorted n-grams are bound once: each of the three columns names
+    # them, and every naming would rebuild them (see functions/text.py)
+    out = df.select(F.col(id_col), T.let(
+        F.array_sort(T.word_ngrams(text_col, n)), stats).alias("r")
+    ).select(id_col, "r.*")
     return out.withColumn(
         "repetitive",
         (F.col("top_ngram_frac") > top_frac_threshold)

@@ -2188,3 +2188,11 @@ ORACLES = {
     # politeness/pending path — its ordering contract is hash-checked via
     # crawl_bfs_order.
 }
+
+# The DuckDB-oracled entries in QUERIES order (the order
+# __spark_entry__.queries() exposes): every one sits before the rows-only
+# remainder. The rows-only entries (no SQL twin by nature, see the closing
+# note of ORACLES) are covered by
+# tests/test_contract.py::test_rows_only_queries_run, which runs each one
+# and requires rows; the oracled ones by test_query_matches_oracle.
+ORACLED_QUERIES = tuple(name for name in QUERIES if name in ORACLES)

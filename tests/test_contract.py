@@ -10,6 +10,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from roddy_spark.plans import contract
 
 import os
 
@@ -40,8 +41,15 @@ def _rowset(cols, rows):
     return sorted(tuple(_norm(r[i]) for i in idx) for r in rows)
 
 
-ORACLED = sorted(entrymod.oracle_sql())
-ROWS_ONLY = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))
+ORACLED = contract.ORACLED_QUERIES
+ROWS_ONLY = tuple(q for q in contract.QUERIES if q not in ORACLED)
+
+
+def test_oracled_queries_precede_rows_only():
+    """Every SQL twin names a query, and a check that runs a prefix of
+    QUERIES meets the oracled entries first."""
+    assert set(ORACLED) == set(contract.ORACLES)
+    assert tuple(contract.QUERIES)[:len(ORACLED)] == ORACLED
 
 
 @pytest.mark.parametrize("name", ORACLED)
