@@ -17,7 +17,7 @@ roddy.go:292-310).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, IntegerType, StringType,
                                StructField, StructType)
@@ -40,21 +40,30 @@ BROADCAST_FRONTIER_MAX_BYTES = 1 << 30
 
 def fetch_join(to_fetch: DataFrame, pages: DataFrame,
                frontier_rows: int | None = None,
-               frontier_bytes: int | None = None) -> DataFrame:
+               frontier_bytes: int | None = None,
+               num_partitions: int | None = None) -> DataFrame:
     """Declarative fetch: frontier → pages on canonical URL.
 
     Two physical strategies:
       * frontier broadcast (default when the batch is known to be small —
         and the per-host politeness budget BOUNDS every batch, so this is
         the normal case): INNER join with the frontier as the broadcast
-        build side streams the huge pages table with NO shuffle; the
-        missing URLs (404s) are recovered with a broadcast anti-join.
-        A left-outer join could never do this — Spark cannot broadcast the
+        build side streams the huge pages table with no shuffle of it; the
+        missing URLs (404s) are recovered by one batch-sized shuffle on
+        ``url_norm`` of the hits and the frontier rows (below). A
+        left-outer join could never do this — Spark cannot broadcast the
         preserved side — and falls back to shuffling the pages table
         (~the whole web) every batch.
       * sort-merge LEFT join when the batch size is unknown or huge —
         by ROW COUNT or by BYTES (``frontier_bytes`` is the crawler's
         write-time observation of the batch's variable-width columns).
+
+    ``num_partitions`` spreads the result over that many partitions (the
+    parse stage downstream runs one task per partition); on the broadcast
+    path the ``url_norm`` shuffle does the spreading, so the page bodies
+    are shuffled once. ``fetch_partition`` is the partition a row leaves
+    the fetch in: after that shuffle on the broadcast path, after the
+    join on the sort-merge path.
     """
     cols = _PAGE_COLS + (("set_cookie",) if "set_cookie" in pages.columns
                          else ())
@@ -63,36 +72,35 @@ def fetch_join(to_fetch: DataFrame, pages: DataFrame,
             and frontier_rows <= BROADCAST_FRONTIER_MAX_ROWS
             and (frontier_bytes is None
                  or frontier_bytes <= BROADCAST_FRONTIER_MAX_BYTES)):
-        hits = (p.join(F.broadcast(to_fetch), p.url == to_fetch.url_norm,
-                       "inner").drop("url"))
-        # 404s = frontier rows with no page: anti-join against the HITS key
-        # set, which is batch-bounded (hits ⊆ to_fetch) — broadcastable at
-        # any web size. Anti-joining against pages.url instead would build/
-        # shuffle a web-sized key side every batch. The hits sub-plan is
-        # re-evaluated here, pruned to url_norm, so its frontier broadcast
-        # carries url_norm only: a different exchange from the hits join's,
-        # which AQE does not reuse. Each batch thus broadcasts the frontier
-        # twice (two small jobs over the same frontier rows) plus one extra
-        # column-pruned pages scan; nothing web-sized crosses the wire.
-        # Keeping every frontier column on the anti-join side would make
-        # the two exchanges equal, but the map-typed ``ctx`` column cannot
-        # be a join key.
-        misses = to_fetch.join(
-            F.broadcast(hits.select("url_norm")), "url_norm", "left_anti")
-        for f in FETCH_RESULT_EXTRA.fields:
-            misses = misses.withColumn(
-                f.name, F.lit(None).cast(f.dataType))
-        if "set_cookie" in cols:
-            misses = misses.withColumn("set_cookie",
-                                       F.lit(None).cast("string"))
-        out = hits.unionByName(misses.select(*hits.columns))
+        hits = p.join(F.broadcast(to_fetch), p.url == to_fetch.url_norm)
+        # 404s: every frontier row also enters with NULL page columns
+        # (``url`` NULL marks it), and one shuffle on url_norm keeps a
+        # URL's hit rows, or its frontier rows when it has no hit. The
+        # frontier is broadcast once and the pages table scanned once;
+        # the shuffle moves hits ⊆ frontier, never anything web-sized.
+        # An anti-join against the hits' keys would re-evaluate the hits
+        # join pruned to url_norm: a second, different frontier
+        # broadcast, a second pages scan (the url column of the whole
+        # web) and a broadcast of the hit keys.
+        misses = to_fetch.select(
+            *[F.lit(None).cast(p.schema[c].dataType).alias(c) for c in cols],
+            "*")
+        rows = hits.unionByName(misses)
+        if num_partitions:
+            rows = rows.repartition(num_partitions, "url_norm")
+        hit = F.col("url").isNotNull()
+        out = (rows.withColumn(
+                   "__any", F.max(hit).over(Window.partitionBy("url_norm")))
+               .filter(hit == F.col("__any")).drop("__any"))
     else:
-        out = to_fetch.join(p, to_fetch.url_norm == p.url, "left").drop("url")
-    return (out
-            .withColumn("status", F.coalesce(F.col("status"), F.lit(404)))
-            .withColumn("success", F.col("status") < 400)
-            .withColumn("fetched_at", F.current_timestamp())
-            .withColumn("fetch_partition", F.spark_partition_id()))
+        out = to_fetch.join(p, to_fetch.url_norm == p.url, "left")
+        if num_partitions:
+            out = out.repartition(num_partitions)
+    status = F.coalesce(F.col("status"), F.lit(404))
+    return out.drop("url").withColumns({
+        "status": status, "success": status < 400,
+        "fetched_at": F.current_timestamp(),
+        "fetch_partition": F.spark_partition_id()})
 
 
 def fetch_mapinpandas(to_fetch: DataFrame, page_lookup: dict,

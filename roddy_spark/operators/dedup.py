@@ -3,10 +3,12 @@ storage/storage.go:47-90) — the 10^10-scale cost center (SURVEY.md §7.4.1).
 
 Two-phase design per the north rule:
   1. a broadcast BLOOM pre-filter over the visited hashes — vectorized
-     numpy membership inside a pandas UDF — cheaply discards the vast
-     majority of already-seen URLs *before* they reach the shuffle;
+     numpy membership inside a pandas UDF — passes the URLs it has never
+     seen (no false negatives) around the join, so they never reach its
+     shuffle;
   2. an exact ``LEFT ANTI`` join against the ``visited`` table confirms
-     (bloom false-positives would otherwise drop never-seen URLs).
+     the maybe-seen rest (bloom false-positives would otherwise drop
+     never-seen URLs).
 
 Between micro-batches the filter is DELTA-MERGED: only the batch's newly
 admitted hashes are OR-ed into the structure driver-side (the north rule's
@@ -39,14 +41,16 @@ from pyspark.sql.types import BooleanType
 # CrawlConfig fields): false-positive target, the visited size at which
 # bloom_mode='auto' turns the filter on (below it the exact anti-join is
 # cheaper than maintaining the filter), and the cap on the per-batch hash
-# delta the driver materializes for a merge. Only the admitted COUNT rides
-# the visited write as an Observation metric — a sliced collect_list would
-# NOT bound transfer, because slice() is a result expression applied AFTER
-# CollectMetrics aggregation: every task still ships its full partial
-# buffer (ADVICE r5). An in-cap delta instead pays one column-pruned
-# collect (url_hash only, ≤ cap × 8 B); an over-cap delta never moves
-# hashes to the driver — it takes the distributed per-shard bitmap build,
-# whose driver footprint is one shard bitmap regardless of batch size.
+# delta the driver materializes for a merge. The admitted COUNT rides the
+# visited write as an Observation metric. The hashes ride it too only when
+# the caller knows a bound on the written rows within the cap
+# (``bloom_delta_metric``): a sliced collect_list would NOT bound transfer,
+# because slice() is a result expression applied AFTER CollectMetrics
+# aggregation: every task still ships its full partial buffer (ADVICE r5).
+# Without such a bound an in-cap delta pays one column-pruned collect
+# (url_hash only, ≤ cap × 8 B); an over-cap delta never moves hashes to
+# the driver — it takes the distributed per-shard bitmap build, whose
+# driver footprint is one shard bitmap regardless of batch size.
 BLOOM_FPP = 0.01
 BLOOM_MIN_VISITED = 50_000
 MAX_DELTA_HASHES = 1_000_000
@@ -182,9 +186,21 @@ def build_visited_bloom(config, visited: DataFrame | None) -> ShardedBloom:
     return sharded_bloom_from_hashes_df(visited, config.bloom_capacity)
 
 
+def bloom_delta_metric(bloom: ShardedBloom | None, max_rows: int):
+    """The Observation metric ``hashes``, the written rows' url_hash list,
+    for a write whose rows a live filter merges next: ``max_rows`` must
+    bound the written rows, and the metric is only built when that bound
+    is within MAX_DELTA_HASHES, so every task's partial buffer is bounded
+    too. None otherwise; the merge then reads the delta back."""
+    if bloom is None or max_rows > MAX_DELTA_HASHES:
+        return None
+    return F.collect_list("url_hash").alias("hashes")
+
+
 def refresh_visited_bloom(config, bloom: ShardedBloom | None,
                           admitted_total: int, read_visited,
-                          delta=None, n_new: int = 0) -> ShardedBloom | None:
+                          delta=None, n_new: int = 0,
+                          hashes=None) -> ShardedBloom | None:
     """The visited filter's whole lifecycle, shared by the batch Crawler
     and the streaming FrontierIngest so the two can never diverge.
 
@@ -194,7 +210,9 @@ def refresh_visited_bloom(config, bloom: ShardedBloom | None,
     live filter: OR in the ``n_new`` hashes of ``delta()`` (the rows just
     admitted), routed by that count against MAX_DELTA_HASHES. Both sources
     are zero-argument callables returning a DataFrame, so nothing is read
-    unless it is used. Returns the filter, or None while inactive."""
+    unless it is used; ``hashes``, the delta's hashes when they rode its
+    write (``bloom_delta_metric``), spares the in-cap read. Returns the
+    filter, or None while inactive."""
     if bloom is None:
         if config.bloom_mode == "off" or (
                 config.bloom_mode == "auto"
@@ -206,8 +224,9 @@ def refresh_visited_bloom(config, bloom: ShardedBloom | None,
         bloom.merge(sharded_bloom_from_hashes_df(
             delta(), config.bloom_capacity, n_shards=bloom.n_shards))
     elif n_new:
-        rows = delta().select("url_hash").collect()
-        bloom.add(np.asarray([r[0] for r in rows], dtype=np.int64))
+        if hashes is None:
+            hashes = [r[0] for r in delta().select("url_hash").collect()]
+        bloom.add(np.asarray(hashes, dtype=np.int64))
     return bloom
 
 
@@ -242,6 +261,15 @@ def dedup_against(candidates: DataFrame, visited: DataFrame | None,
     With a bloom: candidates split into definitely-new (bloom negative —
     pass through with NO join) and maybe-seen (bloom positive — exact
     LEFT ANTI join against ``visited``). Without: plain anti-join.
+
+    The split costs a second evaluation of the probe: the two sides of
+    the union share the candidates' upstream exchange, but each runs the
+    probe's Python pass above it. Evaluating it once needs a shared
+    materialization point above the probe, which Spark only gives as a
+    further exchange; the definitely-new rows would then cross a shuffle
+    again, the cost the split exists to skip. A single anti-join with
+    the probe in its condition evaluates it once but shuffles and sorts
+    every candidate, so the filter would prune nothing.
     """
     if visited is None:
         return candidates
@@ -258,11 +286,21 @@ def dedup_against(candidates: DataFrame, visited: DataFrame | None,
 
 def first_occurrence(candidates: DataFrame, hash_col: str = "url_hash",
                      order_cols: tuple[str, ...] = ("priority", "parent_seq",
-                                                    "pos")) -> DataFrame:
+                                                    "pos"),
+                     num_partitions: int = 0) -> DataFrame:
     """Within-batch first-occurrence-wins dedup (SURVEY.md F8 note): keep the
     candidate instance with the minimum discovery-order tuple per URL.
-    Expressed as min_by aggregation (map-side partial agg; no window sort)."""
+    Expressed as ONE min_by over a struct of the other columns (map-side
+    partial agg; no window sort).
+
+    ``num_partitions`` > 0 hash-partitions the rows by ``hash_col`` into
+    that many partitions before the aggregate, which then needs no
+    shuffle of its own. A caller joining the result with a table bucketed
+    by ``hash_col`` into as many buckets passes the bucket count: the
+    join then finds both sides partitioned alike and shuffles neither."""
     others = [c for c in candidates.columns if c != hash_col]
-    ord_expr = F.struct(*[F.col(c) for c in order_cols])
-    agg = [F.min_by(F.col(c), ord_expr).alias(c) for c in others]
-    return candidates.groupBy(hash_col).agg(*agg)
+    if num_partitions:
+        candidates = candidates.repartition(num_partitions, hash_col)
+    first = F.min_by(F.struct(*others), F.struct(*order_cols))
+    return (candidates.groupBy(hash_col).agg(first.alias("__first"))
+            .select(hash_col, "__first.*"))

@@ -11,15 +11,24 @@ queued, not dropped; deferred rows are already visited-marked so they skip
 re-admission — SURVEY.md §7.4.3).
 
 Skew: one mega-host would put a whole level's rows in one window partition.
-The window only needs per-host ORDER, so we salt the *shuffle* (repartition
-on host ⊕ salt buckets keeps upstream stages balanced) while the window
-itself partitions by host; AQE's skew handling covers the residual. With a
-budget B the per-host rank can also short-circuit: rows are first cut to
-the top-B per (host, salt) slice — a correct upper bound since the final
-per-host top-B is a subset of the union of per-salt top-Bs — shrinking the
-host-window input from N_host to salt·B before the authoritative rank.
+The window only needs per-host ORDER, so the first shuffle is salted: rows
+are ranked within (host, salt) slices, which keeps upstream stages
+balanced; AQE's skew handling covers the residual. With a budget B the
+per-host rank short-circuits: a row outside the top-B of its (host, salt)
+slice cannot make the per-host top-B (the final per-host top-B is a subset
+of the union of per-salt top-Bs), so only the ≤ salt·B survivors of a host
+meet in its authoritative rank.
 
-``politeness_flags`` returns the pool as ONE frame with a fetch flag;
+One frame, one salted shuffle. The second window partitions by (host,
+bucket): bucket 0 holds a host's phase-1 survivors and ranks them
+together, a cut row keeps its slice as bucket salt + 1. So the rows are
+shuffled once on (host, salt) and once on (host, bucket), and the cut rows
+stay spread. Splitting the pool into survivors and cut rows and unioning
+the two sides would shuffle it on (host, salt) twice: Spark infers a
+``WindowGroupLimit`` below the survivors' exchange (its filter is
+``rank <= B``), so the two exchanges differ and AQE cannot reuse one.
+
+``politeness_flags`` returns the pool with a fetch flag;
 ``politeness_split``'s two sides are two filters of it, and a caller that
 persists the flagged frame (the crawl loop) runs the windows once for both.
 """
@@ -44,20 +53,21 @@ def politeness_flags(pool: DataFrame, per_host_budget: int,
 
     # Phase 1 — salted pre-cut: rank within (host, salt). A row ranked > B
     # inside its salt slice alone already has ≥ B same-host rows ahead of it
-    # in (priority, seq) order, so it cannot make the per-host top-B: defer
-    # it without ever entering the per-host window. Survivors ≤ salt·B/host.
+    # in (priority, seq) order, so it cannot make the per-host top-B. Its
+    # bucket is its own slice (salt + 1); the survivors (≤ salt·B per
+    # host) share bucket 0.
     salt = F.pmod(F.col("url_hash"), F.lit(salt_buckets))
     pre = Window.partitionBy("host", salt).orderBy("priority", "seq")
-    tagged = pool.withColumn("__pre", F.row_number().over(pre))
-    survivors = tagged.filter(F.col("__pre") <= per_host_budget).drop("__pre")
-    cut_early = (tagged.filter(F.col("__pre") > per_host_budget)
-                 .drop("__pre").withColumn(FETCH, F.lit(False)))
-
-    # Phase 2 — authoritative per-host rank over the bounded survivor set
-    w = Window.partitionBy("host").orderBy("priority", "seq")
-    ranked = survivors.withColumn(
-        FETCH, F.row_number().over(w) <= per_host_budget)
-    return ranked.unionByName(cut_early)
+    bucket = F.when(F.row_number().over(pre) <= per_host_budget,
+                    F.lit(0)).otherwise(salt + 1)
+    # Phase 2 — authoritative per-host rank of the survivors: partitioned
+    # by (host, bucket), bucket 0 ranks a host's survivors together while
+    # the cut rows stay spread over their slices.
+    w = Window.partitionBy("host", "__bucket").orderBy("priority", "seq")
+    fetch = ((F.col("__bucket") == 0)
+             & (F.row_number().over(w) <= per_host_budget))
+    return (pool.withColumn("__bucket", bucket)
+            .withColumn(FETCH, fetch).drop("__bucket"))
 
 
 def politeness_split(pool: DataFrame, per_host_budget: int,

@@ -92,6 +92,21 @@ def _run_length_stats(grams: Column) -> Column:
     return F.aggregate(grams, acc0, step, finish)
 
 
+def _mean_over_tokens(docs: DataFrame, text_col: str, id_col: str,
+                      ssum, name: str) -> DataFrame:
+    """(id_col, ``n_tokens``, ``name``): each document's token fold
+    ``ssum`` divided by its token count, rounded to 4 decimals (0.0 for
+    no tokens). The tokens are selected into a column once and the three
+    uses read it; naming the tokenizer in each tokenized every document
+    three times (see functions/text.py)."""
+    toks = docs.select(F.col(id_col), T.tokens(text_col).alias("__toks"))
+    n_tok = F.coalesce(F.size("__toks"), F.lit(0))  # null text: 0 tokens
+    return toks.select(
+        F.col(id_col), n_tok.cast("long").alias("n_tokens"),
+        F.round(F.when(n_tok > 0, ssum(F.col("__toks")) / n_tok)
+                .otherwise(F.lit(0.0)), 4).alias(name))
+
+
 def repetition_stats(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", n: int = 2,
                      top_frac_threshold: float = 0.20,
@@ -191,12 +206,7 @@ def lm_crossentropy(docs: DataFrame, ref: DataFrame,
     default = norm - math.log2(1.0)
     ssum = _fold_udf(docs.sparkSession, table, default)
 
-    toks = T.tokens(text_col)
-    n_tok = F.coalesce(F.size(toks), F.lit(0))  # null text: 0 tokens
-    out = docs.select(
-        F.col(id_col), n_tok.cast("long").alias("n_tokens"),
-        F.round(F.when(n_tok > 0, ssum(toks) / n_tok).otherwise(F.lit(0.0)),
-                4).alias("xent_bits"))
+    out = _mean_over_tokens(docs, text_col, id_col, ssum, "xent_bits")
     return out.withColumn("hi_perplexity", F.col("xent_bits") > threshold)
 
 
@@ -253,12 +263,7 @@ def nb_quality_score(docs: DataFrame, good_ref: DataFrame,
     default = odds(None)
     ssum = _fold_udf(docs.sparkSession, table, default)
 
-    toks = T.tokens(text_col)
-    n_tok = F.coalesce(F.size(toks), F.lit(0))  # null text: 0 tokens
-    out = docs.select(
-        F.col(id_col), n_tok.cast("long").alias("n_tokens"),
-        F.round(F.when(n_tok > 0, ssum(toks) / n_tok).otherwise(F.lit(0.0)),
-                4).alias("log_odds"))
+    out = _mean_over_tokens(docs, text_col, id_col, ssum, "log_odds")
     return out.withColumn("good", F.col("log_odds") > threshold)
 
 

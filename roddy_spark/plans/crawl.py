@@ -15,7 +15,7 @@ Per-batch dataflow (each arrow is declarative DataFrame API; Python runs
 only in Arrow passes: canonicalize, robots, bloom probe, link extraction):
 
   candidates ─ admit(admission_filters → in-batch dedup → bloom+anti-join
-               → seq) ─► visited write, read back ─┐
+               → seq) ─► visited write (+ the bloom delta), read back ─┐
   pending ────────────────────────────────────────────────────────────► pool
   pool ─ politeness_flags(per-host window budget) ─► flagged (persisted)
   flagged ─ NOT fetch ─► deferred ─► pending write (fills the cache)
@@ -28,10 +28,14 @@ only in Arrow passes: canonicalize, robots, bloom probe, link extraction):
 
 Below 20k candidates ``seq`` is a one-partition window (operators/rank.py),
 so admission runs no job of its own; the politeness windows run once per
-batch, in the pending write. The fetches and candidates writes repartition
-to a data-sized width only when that width is above 1 (mid-size batches);
-a small batch is written as its stage leaves it, with no exchange job. A
-small batch runs at most 15 Spark jobs (pinned by tests/test_crawl_e2e.py).
+batch, in the pending write, which shuffles the pool once on (host,
+salt); the fetch broadcasts the frontier once and scans the pages once.
+With the filter live, the batch's admitted hashes ride the visited write
+when the candidate count bounds them under the delta cap, so the merge
+reads nothing back. The fetches and candidates writes spread to a
+data-sized width only when that width is above 1 (mid-size batches); a
+small batch is written as its stage leaves it, with no exchange job. A
+small batch runs at most 12 Spark jobs (pinned by tests/test_crawl_e2e.py).
 
 ``admission_filters`` and ``link_rows`` are also the DFS fixpoint's
 filter and link steps (plans/dfs.py): one policy for both visit orders.
@@ -60,7 +64,8 @@ from roddy_spark.extract import parse_html_udf
 from roddy_spark.fetch import fetch_join
 from roddy_spark.functions import urls as U
 from roddy_spark.operators.admission import admit
-from roddy_spark.operators.dedup import refresh_visited_bloom
+from roddy_spark.operators.dedup import (bloom_delta_metric,
+                                         refresh_visited_bloom)
 from roddy_spark.operators.politeness import (politeness_flags,
                                               split_flagged)
 from roddy_spark.operators.rank import release_rank_caches
@@ -635,21 +640,27 @@ class Crawler:
                 obs_adm = Observation(f"adm_{batch}")
                 adm_metrics = [F.count(F.lit(1)).alias("n"),
                                _row_bytes_agg(admitted).alias("bytes")]
+                # the filter's delta rides the write when the candidate
+                # count bounds it: the merge then reads nothing back
+                ride = bloom_delta_metric(bloom, n_cand)
+                if ride is not None:
+                    adm_metrics.append(ride)
                 store.write_visited(
                     admitted.observe(obs_adm, *adm_metrics)
                     .withColumn("batch", F.lit(batch)), batch)
                 release_rank_caches()
                 admitted = store.read_visited(spark, batch).drop("batch")
-                n_admitted = int(obs_adm.get["n"])
-                adm_bytes = int(obs_adm.get["bytes"] or 0) + 32 * n_admitted
+                got = obs_adm.get
+                n_admitted = int(got["n"])
+                adm_bytes = int(got["bytes"] or 0) + 32 * n_admitted
                 admitted_count += n_admitted
-                # per-micro-batch delta merge of the read-back rows, routed
+                # per-micro-batch delta merge of the admitted hashes, routed
                 # by the COUNT that rode the write (or the first build, once
                 # bloom_mode='auto' activates the filter)
                 bloom = refresh_visited_bloom(
                     cfg, bloom, admitted_count,
                     lambda: store.read_visited(spark), lambda: admitted,
-                    n_admitted)
+                    n_admitted, got.get("hashes"))
             else:
                 admitted = _empty_visited(spark)
                 n_admitted = 0
@@ -698,14 +709,26 @@ class Crawler:
             if "cookies" in fparams:
                 # cookie-aware fetcher gets the CURRENT jar snapshot
                 fkw["cookies"] = dict(self.cookies)
-            fetched = (self.fetcher(to_fetch, self.pages, **fkw)
-                       .withColumn("batch", F.lit(batch)))
+            # fetches feed the HTML-parse stage next. A MID-SIZE batch is
+            # spread to a data-sized width: as the fetch stage leaves it
+            # (AQE coalesces 2KB-html shuffles) it lands in one file and
+            # the parse runs in one task. Width 1 keeps the stage's own
+            # output (a repartition would be an exchange job for nothing),
+            # and a LARGE batch's fetch stage is already wide. A fetcher
+            # that takes ``num_partitions`` spreads its own output
+            # (fetch_join: in the shuffle it runs anyway, so the page
+            # bodies cross the wire once); any other is repartitioned.
+            w = self._width(max(n_admitted, n_pending), 5_000)
+            spread = 1 < w < self.spark.sparkContext.defaultParallelism
+            if spread and "num_partitions" in fparams:
+                fkw["num_partitions"] = w
             err = F.when(F.col("success"), F.lit(None)).otherwise(
                 F.concat(F.lit("http_"), F.col("status").cast("string")))
-            fetched = fetched.withColumn("error", err).withColumn(
-                "error_effective",
-                F.when(err.isin(*cfg.ignored_errors), F.lit(None))
-                 .otherwise(err) if cfg.ignored_errors else err)
+            fetched = self.fetcher(to_fetch, self.pages, **fkw).withColumns({
+                "batch": F.lit(batch), "error": err,
+                "error_effective":
+                    F.when(err.isin(*cfg.ignored_errors), F.lit(None))
+                     .otherwise(err) if cfg.ignored_errors else err})
             # OnResponse slot: reshape/drop successful responses before they
             # persist; dropped rows are suppressed (never stored/expanded/
             # counted). Fired BEFORE the counters observe, by design.
@@ -731,14 +754,7 @@ class Crawler:
                     F.sum(F.col("set_cookie").isNotNull().cast("long"))
                     .alias("n_set_cookie"))
             fetched = fetched.observe(obs_f, *f_metrics)
-            # fetches feed the HTML-parse stage next. A MID-SIZE batch is
-            # spread to a data-sized width: as the fetch stage leaves it
-            # (AQE coalesces 2KB-html shuffles) it lands in one file and
-            # the parse runs in one task. Width 1 keeps the stage's own
-            # output (a repartition would be an exchange job for nothing),
-            # and a LARGE batch's fetch stage is already wide.
-            w = self._width(max(n_admitted, n_pending), 5_000)
-            if 1 < w < self.spark.sparkContext.defaultParallelism:
+            if spread and "num_partitions" not in fparams:
                 fetched = fetched.repartition(w)
             store.write(fetched, "fetches", batch)
             if flagged is not None:

@@ -43,6 +43,12 @@ def build_session(app_name: str = "roddy-spark", cores: int | None = None,
         .config("spark.driver.memory", os.environ.get("RODDY_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark 4 captures the Python call site of every functions,
+        # Column and DataFrame call for analysis errors, at about 10 py4j
+        # round trips each (F.col costs 13; building one crawl-batch
+        # ``admit`` plan takes 593 round trips with it, 273 without).
+        # Errors then name the failing expression without its Python line.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

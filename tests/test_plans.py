@@ -80,19 +80,73 @@ def test_partial_aggregation_in_dedup(spark, sf_dir):
     assert "partial_" in p, p  # HashAggregate(partial) before the shuffle
 
 
+def _tree(plan: str) -> tuple[list[str], list[int | None]]:
+    """Node lines of a "simple" plan (its final plan when adaptive) and
+    each line's parent index, read from the tree-drawing indentation."""
+    if "== Final Plan ==" in plan:
+        plan = plan.split("== Final Plan ==")[1].split("== Initial Plan")[0]
+    lines = [ln for ln in plan.splitlines()
+             if ln.strip() and not ln.startswith("==")]
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    parents: list[int | None] = []
+    for i, d in enumerate(depth):
+        parents.append(next((j for j in range(i - 1, -1, -1)
+                             if depth[j] < d), None))
+    return lines, parents
+
+
+def _ancestors(parents, i) -> list[int]:
+    out = []
+    while parents[i] is not None:
+        i = parents[i]
+        out.append(i)
+    return out
+
+
 def test_politeness_single_shuffle_per_phase(spark):
     """The salted politeness pre-cut must not explode into extra exchanges
-    beyond its two window phases."""
-    from roddy_spark.operators.politeness import politeness_split
+    beyond its two window phases: the flagged frame shuffles the pool
+    once on (host, salt) and once on (host, bucket), and each side of the
+    split has the same two exchanges."""
+    from roddy_spark.operators.politeness import (politeness_flags,
+                                                  politeness_split)
     df = spark.range(1000).select(
         F.concat(F.lit("u"), (F.col("id") % 7).cast("string")).alias("host"),
         F.col("id").alias("url_hash"),
         F.col("id").alias("seq"),
         F.lit(1).alias("priority"))
-    to_fetch, deferred = politeness_split(df, per_host_budget=3)
-    p = plan_of(to_fetch, mode="simple")
-    # phase 1 shuffles on (host, salt), phase 2 on host — exactly 2
-    assert p.count("Exchange hashpartitioning") <= 2, p
+    flagged = politeness_flags(df, per_host_budget=3)
+    p = plan_of(flagged, mode="simple")
+    exchanges = [ln for ln in p.splitlines()
+                 if "Exchange hashpartitioning" in ln]
+    assert len(exchanges) == 2, p
+    # the salt is pre-projected as a window key (_w0), the bucket is named
+    assert sum("(host#" in ln and "_w0#" in ln for ln in exchanges) == 1, p
+    assert sum("__bucket#" in ln for ln in exchanges) == 1, p
+    for side in politeness_split(df, per_host_budget=3):
+        p = plan_of(side, mode="simple")
+        assert p.count("Exchange hashpartitioning") == 2, p
+
+
+def test_politeness_flags_match_per_host_rank(spark):
+    """The salted two-phase flag equals the unsalted definition: a row
+    fetches iff it ranks within the budget among its host's rows by
+    (priority, seq), on hosts of skewed sizes."""
+    from roddy_spark.operators.politeness import FETCH, politeness_flags
+    df = spark.range(600).select(
+        F.concat(F.lit("h"), (F.col("id") % 5 * F.col("id") % 11)
+                 .cast("string")).alias("host"),
+        F.xxhash64("id").alias("url_hash"),
+        F.col("id").alias("seq"),
+        (F.col("id") % 3).cast("int").alias("priority"))
+    rows = politeness_flags(df, per_host_budget=4).collect()
+    by_host: dict = {}
+    for r in rows:
+        by_host.setdefault(r["host"], []).append(r)
+    for host, rs in by_host.items():
+        rs.sort(key=lambda r: (r["priority"], r["seq"]))
+        assert [r[FETCH] for r in rs] == [i < 4 for i in range(len(rs))], \
+            host
 
 
 def test_bucketed_visited_antijoin_no_exchange(spark, tmp_path):
@@ -258,6 +312,162 @@ def test_fetch_join_byte_bound_takes_smj_path(spark, monkeypatch):
     assert seen, "small frontier below both bounds must broadcast"
     assert got_smj == got_bcast
     assert {s for (_, s, _) in got_smj} == {200, 404}
+
+
+def test_fetch_join_broadcasts_frontier_once(spark, tmp_path):
+    """The broadcast path broadcasts the frontier once and scans the pages
+    table once, and returns the rows of the sort-merge path: every hit
+    with its page, every miss as a 404 with NULL page columns, the
+    frontier columns (ctx included) on both, duplicate URLs kept."""
+    from roddy_spark import fetch as FE
+
+    pages_dir = str(tmp_path / "pages")
+    spark.createDataFrame(
+        [(f"http://h.test/{i}", 200 if i != 4 else 500, "text/html",
+          f"<html>{i}</html>") for i in (0, 2, 4, 6, 8)],
+        ["url", "status", "content_type", "body_html"]
+    ).write.parquet(pages_dir)
+    pages = spark.read.parquet(pages_dir)
+    frontier = spark.createDataFrame(
+        [(f"http://h.test/{i}", i, {"k": str(i)}) for i in range(6)]
+        + [("http://h.test/2", 9, None), ("http://h.test/3", 10, None)],
+        "url_norm string, seq long, ctx map<string,string>")
+
+    def rows(df):
+        return sorted((r["url_norm"], r["seq"], r["status"], r["success"],
+                       r["body_html"], r["content_type"],
+                       tuple(sorted((r["ctx"] or {}).items())))
+                      for r in df.collect())
+
+    out = FE.fetch_join(frontier, pages, frontier_rows=8,
+                        frontier_bytes=1024)
+    got = rows(out)
+    assert got == rows(FE.fetch_join(frontier, pages, frontier_rows=None))
+    assert [(u, s, st) for u, s, st, *_ in got] == [
+        ("http://h.test/0", 0, 200), ("http://h.test/1", 1, 404),
+        ("http://h.test/2", 2, 200), ("http://h.test/2", 9, 200),
+        ("http://h.test/3", 3, 404), ("http://h.test/3", 10, 404),
+        ("http://h.test/4", 4, 500), ("http://h.test/5", 5, 404)]
+    assert got[1][4] is None and got[1][3] is False
+    assert got[0][6] == (("k", "0"),)
+
+    lines, parents = _tree(plan_of(out, "simple"))
+    bcast = [i for i, ln in enumerate(lines) if "BroadcastExchange" in ln]
+    assert len(bcast) == 1, "\n".join(lines)
+    fed = [i for i, ln in enumerate(lines) if bcast[0] in _ancestors(
+        parents, i)]
+    assert any("LocalTableScan" in lines[i] or "Scan ExistingRDD"
+               in lines[i] for i in fed), "\n".join(lines)
+    scans = [ln for ln in lines if "FileScan" in ln and pages_dir in ln]
+    assert len(scans) == 1, "\n".join(lines)
+
+    # spread over 3 partitions by the url_norm shuffle itself: the page
+    # bodies cross one exchange, not a second round-robin one
+    spread = FE.fetch_join(frontier, pages, frontier_rows=8,
+                           frontier_bytes=1024, num_partitions=3)
+    assert rows(spread) == got
+    assert spread.rdd.getNumPartitions() == 3
+    p = plan_of(spread, "simple").split("== Initial Plan ==")[0]
+    assert p.count("Exchange hashpartitioning(url_norm") == 1, p
+    assert "RoundRobin" not in p, p
+
+
+def _bucketed_admit_inputs(spark, root, buckets):
+    from roddy_spark.functions import urls as U
+    from roddy_spark.plans.crawl import SnapshotStore
+
+    store = SnapshotStore(root, visited_buckets=buckets)
+    url = F.concat(F.lit("http://h0.test/p/"), F.col("id").cast("string"))
+    store.write_visited(spark.range(0, 1000).select(
+        url.alias("url_norm"), U.hash_of(url).alias("url_hash"),
+        F.lit("h0.test").alias("host"), F.lit(1).alias("depth"),
+        F.lit(1).alias("priority"), F.col("id").alias("seq"),
+        F.create_map().cast("map<string,string>").alias("ctx"),
+        F.lit(1).alias("batch")), 1)
+    cand = spark.range(0, 300).select(
+        F.concat(F.lit("http://h0.test/p/"),
+                 (F.col("id") * 7).cast("string")).alias("url_norm"),
+        F.lit(2).alias("depth"), F.lit(1).alias("priority"),
+        (F.col("id") % 5).alias("parent_seq"),
+        F.col("id").cast("int").alias("pos"))
+    return cand, store.read_visited(spark)
+
+
+def _visited_bloom(visited):
+    from roddy_spark.operators.dedup import ShardedBloom
+    bloom = ShardedBloom(1 << 12)
+    bloom.add(visited.select("url_hash").toPandas()["url_hash"].to_numpy())
+    return bloom
+
+
+@pytest.mark.parametrize("buckets", [4, 8, 16],
+                         ids=["below", "equal", "above"])
+@pytest.mark.parametrize("with_bloom", [False, True],
+                         ids=["exact", "bloom"])
+def test_bucketed_admit_keeps_visited_unshuffled(spark, tmp_path, buckets,
+                                                 with_bloom):
+    """``admit`` over a visited table bucketed into K buckets, K below,
+    equal to and above the 8 shuffle partitions: ``first_occurrence``'s
+    candidates come in K hash partitions, so the visited scan stays
+    bucketed with no Exchange between it and the anti-join (the whole
+    history would cross the wire every batch)."""
+    from roddy_spark.config import CrawlConfig
+    from roddy_spark.operators.admission import admit
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    cand, visited = _bucketed_admit_inputs(
+        spark, str(tmp_path / f"ck{buckets}"), buckets)
+    bloom = _visited_bloom(visited) if with_bloom else None
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = admit(cand, CrawlConfig(visited_buckets=buckets), visited,
+                    bloom, admitted_so_far=1000, num_partitions=1)
+        lines, parents = _tree(plan_of(out, "simple"))
+        scan = next(i for i, ln in enumerate(lines)
+                    if "FileScan" in ln and "rs_visited_" in ln)
+        assert "Bucketed: true" in lines[scan], "\n".join(lines)
+        up = _ancestors(parents, scan)
+        join = next(i for i in up if "Join" in lines[i])
+        assert not [i for i in up[:up.index(join)]
+                    if "Exchange" in lines[i]], "\n".join(lines)
+        got = out.collect()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                       str(64 * 1024 * 1024))
+    # ids 0..142 (7·id < 1000) are visited; 143..299 are admitted
+    assert sorted(r["seq"] for r in got) == list(range(1000, 1157))
+
+
+def test_bloom_split_keeps_fresh_rows_off_the_join(spark, tmp_path):
+    """A bloom-on admission routes the bloom-negative rows around the
+    anti-join: in the executed plan of the admitted rows (the plan the
+    crawl's visited write runs), one probe feeds the join and the other
+    side of the split reaches no join. Each probe sits above
+    ``first_occurrence``'s aggregate and neither runs on the visited
+    side (a Python pass over the whole history)."""
+    from roddy_spark.config import CrawlConfig
+    from roddy_spark.operators.admission import admit
+
+    cand, visited = _bucketed_admit_inputs(spark, str(tmp_path / "ck"), 0)
+    out = admit(cand, CrawlConfig(), visited, _visited_bloom(visited),
+                admitted_so_far=1000,
+                num_partitions=1)
+    got = out.collect()
+    assert sorted(r["seq"] for r in got) == list(range(1000, 1157))
+    lines, parents = _tree(plan_of(out, "simple"))
+    probes = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
+    assert len(probes) == 2, "\n".join(lines)
+    joins = [i for i, ln in enumerate(lines) if "Join" in ln]
+    assert len(joins) == 1, "\n".join(lines)
+    joined = [i for i in probes if joins[0] in _ancestors(parents, i)]
+    assert len(joined) == 1, "\n".join(lines)
+    for probe in probes:
+        below = [i for i in range(len(lines))
+                 if probe in _ancestors(parents, i)]
+        assert any("Aggregate" in lines[i] or "ReusedExchange" in lines[i]
+                   for i in below), "\n".join(lines)
+        assert not any("Scan" in lines[i] and "visited" in lines[i]
+                       for i in below), "\n".join(lines)
 
 
 def test_c4_filters_zero_exchange(spark, sf_dir):

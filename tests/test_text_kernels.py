@@ -120,3 +120,15 @@ def test_repetition_stats_plan_tokenizes_once(edge):
     out = repetition_stats(edge, id_col="id")
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("split(") == 1
+
+
+@pytest.mark.parametrize("scorer", ["lm_crossentropy", "nb_quality_score"])
+def test_lm_scorers_plan_tokenizes_once(edge, scorer):
+    """Both token-fold scorers select the tokens into a column once: the
+    token count, the fold's argument and the zero-token guard read it, so
+    the plan holds one tokenizer (4 when each use named it)."""
+    from roddy_spark.operators import textquality as Q
+    refs = (edge,) * (1 if scorer == "lm_crossentropy" else 2)
+    out = getattr(Q, scorer)(edge, *refs, id_col="id")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1, plan
