@@ -23,7 +23,8 @@ from pyspark.sql.types import BooleanType
 
 from roddy_spark.config import CrawlConfig
 from roddy_spark.functions import urls as U
-from roddy_spark.operators.dedup import dedup_against, first_occurrence
+from roddy_spark.operators.dedup import (bloom_prefilter, dedup_against,
+                                         first_occurrence)
 from roddy_spark.operators.rank import ordered_seq
 from roddy_spark.robots import robots_gate_series
 
@@ -101,11 +102,17 @@ def admit(candidates: DataFrame, config: CrawlConfig,
     # visited table — before fetch). allow_url_revisit (F9) bypasses BOTH —
     # the reference skips the whole visited check (roddy.go:293-295). A
     # visited table bucketed by url_hash into K buckets gets candidates in
-    # K hash partitions, so the anti-join shuffles neither side.
+    # K hash partitions, so the anti-join shuffles neither side. The bloom
+    # probe runs once, below first_occurrence: its tag is a function of
+    # url_hash, so it rides the aggregate's struct, and the aggregate's
+    # exchange (which every row crosses anyway) feeds both sides of the
+    # split in dedup_against.
     if not config.allow_url_revisit:
         buckets = config.visited_buckets if visited is not None else 0
+        if visited is not None and bloom is not None:
+            df = bloom_prefilter(df, bloom, "url_hash")
         df = first_occurrence(df, "url_hash", order_cols, buckets)
-        df = dedup_against(df, visited, bloom, "url_hash")
+        df = dedup_against(df, visited, "url_hash")
 
     # deterministic global discovery order (the crawl-ordering contract)
     df = ordered_seq(df, list(order_cols), "seq",

@@ -55,6 +55,9 @@ BLOOM_FPP = 0.01
 BLOOM_MIN_VISITED = 50_000
 MAX_DELTA_HASHES = 1_000_000
 
+# the column ``bloom_prefilter`` tags rows with, ``dedup_against`` splits on
+MAYBE_SEEN = "__maybe_seen"
+
 
 class ShardedBloom:
     """Bloom filter over int64 hashes, sharded by pmod(hash, n_shards) —
@@ -232,7 +235,7 @@ def refresh_visited_bloom(config, bloom: ShardedBloom | None,
 
 def bloom_prefilter(candidates: DataFrame, bloom: ShardedBloom,
                     hash_col: str = "url_hash") -> DataFrame:
-    """Tag each row with ``__maybe_seen`` from the broadcast bloom. A bloom
+    """Tag each row with ``MAYBE_SEEN`` from the broadcast bloom. A bloom
     has no false negatives, so ``False`` ⇒ the URL is definitely new and can
     bypass the exact anti-join entirely; ``True`` ⇒ maybe seen (or a false
     positive) and must be confirmed by the anti-join. See ``dedup_against``.
@@ -244,44 +247,26 @@ def bloom_prefilter(candidates: DataFrame, bloom: ShardedBloom,
     def maybe_seen(h: pd.Series) -> pd.Series:
         return pd.Series(bc.value.might_contain(h.to_numpy(dtype=np.int64)))
 
-    # The probe is a pure function of the hash, but marked nondeterministic
-    # so Catalyst keeps it where it is written: pushed through an upstream
-    # group-by on the hash (first_occurrence) it splits that aggregate into
-    # one shuffle per side of the split, and inferred across the anti-join
-    # it runs a Python pass over the whole visited table.
-    probe = maybe_seen.asNondeterministic()
-    return candidates.withColumn("__maybe_seen", probe(F.col(hash_col)))
+    return candidates.withColumn(MAYBE_SEEN, maybe_seen(F.col(hash_col)))
 
 
 def dedup_against(candidates: DataFrame, visited: DataFrame | None,
-                  bloom: ShardedBloom | None = None,
                   hash_col: str = "url_hash") -> DataFrame:
     """Exact not-yet-visited filter with optional bloom fast path.
 
-    With a bloom: candidates split into definitely-new (bloom negative —
-    pass through with NO join) and maybe-seen (bloom positive — exact
-    LEFT ANTI join against ``visited``). Without: plain anti-join.
-
-    The split costs a second evaluation of the probe: the two sides of
-    the union share the candidates' upstream exchange, but each runs the
-    probe's Python pass above it. Evaluating it once needs a shared
-    materialization point above the probe, which Spark only gives as a
-    further exchange; the definitely-new rows would then cross a shuffle
-    again, the cost the split exists to skip. A single anti-join with
-    the probe in its condition evaluates it once but shuffles and sorts
-    every candidate, so the filter would prune nothing.
-    """
+    Candidates tagged by ``bloom_prefilter`` split on the tag into
+    definitely-new (bloom negative — pass through with NO join) and
+    maybe-seen (bloom positive — exact LEFT ANTI join against
+    ``visited``), and the tag is dropped. Untagged: plain anti-join.
+    Without ``visited`` the candidates pass unchanged."""
     if visited is None:
         return candidates
-    if bloom is None:
-        return candidates.join(visited.select(hash_col), on=hash_col,
-                               how="left_anti")
-    tagged = bloom_prefilter(candidates, bloom, hash_col)
-    fresh = tagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    maybe = tagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    confirmed = maybe.join(visited.select(hash_col), on=hash_col,
-                           how="left_anti")
-    return fresh.unionByName(confirmed)
+    seen = visited.select(hash_col)
+    if MAYBE_SEEN not in candidates.columns:
+        return candidates.join(seen, on=hash_col, how="left_anti")
+    fresh = candidates.filter(~F.col(MAYBE_SEEN)).drop(MAYBE_SEEN)
+    maybe = candidates.filter(F.col(MAYBE_SEEN)).drop(MAYBE_SEEN)
+    return fresh.unionByName(maybe.join(seen, on=hash_col, how="left_anti"))
 
 
 def first_occurrence(candidates: DataFrame, hash_col: str = "url_hash",

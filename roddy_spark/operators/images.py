@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
+from roddy_spark.operators.textdedup import hamming_pairs
 from roddy_spark.sources import codecs
 
 DECODE_SCHEMA = StructType([
@@ -80,43 +81,19 @@ def decode_validate(corpus: DataFrame) -> DataFrame:
     return corpus.select(*cols).mapInPandas(run, DECODE_SCHEMA)
 
 
-def phash_near_duplicates(corpus: DataFrame, max_hamming: int = 8,
-                          band_bits: int = 16) -> DataFrame:
-    """Near-duplicate image pairs by perceptual hash, at scale.
-
-    LSH-style banding on the 64-bit phash: split into 64/band_bits bands;
-    two images within ``max_hamming`` of each other share at least one
-    exact band with high probability when max_hamming < #bands (pigeonhole:
-    GUARANTEED when max_hamming < 64/band_bits... i.e. #bands > max_hamming).
+def phash_near_duplicates(corpus: DataFrame,
+                          max_hamming: int = 8) -> DataFrame:
+    """Near-duplicate image pairs (a, b, hamming) by perceptual hash, at
+    scale: ``hamming_pairs`` over four 16-bit bands of the 64-bit phash.
     Candidate pairs come from an equi-join on (band_idx, band_value) — a
     shuffle hash join, NOT an O(n²) cross join — then exact hamming
-    verification JVM-side via bit_count(xor).
+    verification JVM-side via bit_count(xor). A pair within
+    ``max_hamming`` shares a band with high probability, and always when
+    max_hamming < 4 (pigeonhole).
     """
-    n_bands = 64 // band_bits
-    bands = F.array(*[
-        F.struct(F.lit(i).alias("band"),
-                 F.shiftrightunsigned(F.col("phash"), i * band_bits)
-                  .bitwiseAND(F.lit((1 << band_bits) - 1)).alias("val"))
-        for i in range(n_bands)])
-    tagged = (corpus.select("image_id", "phash")
-              .withColumn("b", F.explode(bands))
-              .select("image_id", "phash", "b.band", "b.val"))
-    left = tagged.alias("l")
-    right = tagged.alias("r")
-    pairs = (left.join(right,
-                       (F.col("l.band") == F.col("r.band"))
-                       & (F.col("l.val") == F.col("r.val"))
-                       & (F.col("l.image_id") < F.col("r.image_id")))
-             .select(F.col("l.image_id").alias("a"),
-                     F.col("r.image_id").alias("b"),
-                     F.col("l.phash").alias("pa"),
-                     F.col("r.phash").alias("pb"))
-             .dropDuplicates(["a", "b"]))
-    return (pairs.withColumn(
-                "hamming",
-                F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))))
-            .filter(F.col("hamming") <= max_hamming)
-            .select("a", "b", "hamming"))
+    return (hamming_pairs(corpus, "image_id", "phash", 16, 4, max_hamming)
+            .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"),
+                    "hamming"))
 
 
 def join_page_images(extractions: DataFrame, corpus: DataFrame) -> DataFrame:

@@ -29,8 +29,10 @@ the two sides would shuffle it on (host, salt) twice: Spark infers a
 ``rank <= B``), so the two exchanges differ and AQE cannot reuse one.
 
 ``politeness_flags`` returns the pool with a fetch flag;
-``politeness_split``'s two sides are two filters of it, and a caller that
-persists the flagged frame (the crawl loop) runs the windows once for both.
+``politeness_split``'s two sides are two filters of it (``split_flagged``).
+The crawl loop writes the flagged frame itself as its pending snapshot and
+splits the snapshot it reads back, so the windows run once, in that
+write, for both sides.
 """
 
 from __future__ import annotations
@@ -46,7 +48,7 @@ def politeness_flags(pool: DataFrame, per_host_budget: int,
                      salt_buckets: int = 8) -> DataFrame:
     """pool + a boolean ``FETCH`` column: true for the rows released to
     this batch's fetch, false for the deferred ones. One frame, so a
-    caller that persists it runs the politeness windows once for both
+    caller that writes it once runs the politeness windows once for both
     sides of the split. Budget 0 ⇒ every row fetches."""
     if not per_host_budget:
         return pool.withColumn(FETCH, F.lit(True))

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from roddy_spark.operators.textdedup import _observe_candidates
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -40,20 +42,47 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
     computed once per SIDE before the join (r7): each candidate pair
     then pays one dot product instead of three array passes — the same
     doubles in the same division, so scores are bit-identical."""
-    q = queries.select(F.col(id_col).alias("qid"),
-                       F.col(vec_col).alias("qv"),
-                       _norm(F.col(vec_col)).alias("qn"))
-    c = corpus.select(F.col(id_col).alias("nid"),
-                      F.col(vec_col).alias("nv"),
-                      _norm(F.col(vec_col)).alias("nn"))
-    scored = (c.join(F.broadcast(q))
-              .withColumn("sim", _dot(F.col("qv"), F.col("nv"))
-                          / (F.col("qn") * F.col("nn")))
-              .drop("qv", "nv", "qn", "nn"))
+    q = _side(queries, "q", id_col, vec_col)
+    c = _side(corpus, "n", id_col, vec_col)
+    return _top_k(c.join(F.broadcast(q)).select("qid", "nid", _sim()), k)
+
+
+def _side(df: DataFrame, p: str, id_col: str, vec_col: str,
+          *extra: Column) -> DataFrame:
+    """One side of a search, ``p`` = "q" (queries) or "n" (neighbors):
+    (pid, pv, pn) = id, vector and its norm, plus ``extra`` columns. The
+    norm is computed once per row, so a candidate pair pays one dot
+    product (``_sim``), not three array passes."""
+    return df.select(F.col(id_col).alias(f"{p}id"),
+                     F.col(vec_col).alias(f"{p}v"),
+                     _norm(F.col(vec_col)).alias(f"{p}n"), *extra)
+
+
+def _sim() -> Column:
+    """Cosine ``sim`` of a (query, neighbor) row from the per-side norms."""
+    return (_dot(F.col("qv"), F.col("nv"))
+            / (F.col("qn") * F.col("nn"))).alias("sim")
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The rank tail of every top-k search: per query, the ``k`` best
+    (qid, nid, sim) rows by sim, ties broken by neighbor id
+    (determinism)."""
     w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("qid", "nid", "rank", F.round("sim", 4).alias("sim")))
+
+
+def _bucket_topk(c: DataFrame, q: DataFrame, key: str, k: int,
+                 telemetry: dict | None) -> DataFrame:
+    """The scoring step of the bucketed searches: corpus rows
+    (nid, nv, nn, key) meet the broadcast query rows (qid, qv, qn, key)
+    on ``key``; a pair sharing several keys is scored once. The
+    candidate count is observed, then ranked."""
+    scored = (c.join(F.broadcast(q), key).select("qid", "nid", _sim())
+              .dropDuplicates(["qid", "nid"]))
+    return _top_k(_observe_candidates(scored, telemetry), k)
 
 
 def _plane_coef(p: int, d: int) -> float:
@@ -114,32 +143,14 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
     product. Recall is high for genuinely-similar neighbors (cosine ≳ 0.8);
     for weakly-similar data the probe set bounds the scanned fraction at
     ~(1 + C(n,1) + C(n,2))/2^n of the corpus."""
-    def with_sig(df, idn, vecn, nrm):
-        return df.select(F.col(id_col).alias(idn),
-                         F.col(vec_col).alias(vecn),
-                         _norm(F.col(vec_col)).alias(nrm),
-                         _lsh_bits(F.col(vec_col), dim, n_planes)
-                         .alias("sig"))
-
-    c = with_sig(corpus, "nid", "nv", "nn").withColumnRenamed("sig",
-                                                              "bucket")
-    q = with_sig(queries, "qid", "qv", "qn")
+    sig = _lsh_bits(F.col(vec_col), dim, n_planes)
+    c = _side(corpus, "n", id_col, vec_col, sig.alias("bucket"))
+    q = _side(queries, "q", id_col, vec_col, sig.alias("sig"))
     # probe the exact bucket plus all ≤probe_bits-flip neighbors
     masks = _probe_masks(n_planes, probe_bits)
     probes = F.array(*[F.col("sig").bitwiseXOR(F.lit(m)) for m in masks])
     qp = q.select("qid", "qv", "qn", F.explode(probes).alias("bucket"))
-    # per-side norms precomputed (r7): one dot per candidate, not three
-    # array passes; identical doubles, bit-identical scores
-    scored = (c.join(F.broadcast(qp), "bucket")
-              .withColumn("sim", _dot(F.col("qv"), F.col("nv"))
-                          / (F.col("qn") * F.col("nn")))
-              .select("qid", "nid", "sim").dropDuplicates(["qid", "nid"]))
-    from roddy_spark.operators.textdedup import _observe_candidates
-    scored = _observe_candidates(scored, telemetry)
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "nid", "rank", F.round("sim", 4).alias("sim")))
+    return _bucket_topk(c, qp, "bucket", k, telemetry)
 
 
 def _kmeans_centroids(df: DataFrame, n_centroids: int, dim: int,
@@ -197,29 +208,11 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
     DuckDB-oracled as ``ann_ivf_topk``); partial probing is covered by a
     recall-vs-brute-force test."""
     cent = _kmeans_centroids(corpus, n_centroids, dim, vec_col, sample_rows)
-    c = corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"),
-        _norm(F.col(vec_col)).alias("nn"),
-        F.element_at(_nearest_centroids(F.col(vec_col), cent, 1), 1)
-        .alias("cell"))
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-        F.explode(_nearest_centroids(F.col(vec_col), cent,
-                                     min(n_probe, len(cent))))
-        .alias("cell"))
-    # per-side norms precomputed (r7): bit-identical scores, 3x fewer
-    # array passes per candidate
-    scored = (c.join(F.broadcast(q), "cell")
-              .withColumn("sim", _dot(F.col("qv"), F.col("nv"))
-                          / (F.col("qn") * F.col("nn")))
-              .select("qid", "nid", "sim").dropDuplicates(["qid", "nid"]))
-    from roddy_spark.operators.textdedup import _observe_candidates
-    scored = _observe_candidates(scored, telemetry)
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "nid", "rank", F.round("sim", 4).alias("sim")))
+    c = _side(corpus, "n", id_col, vec_col, F.element_at(
+        _nearest_centroids(F.col(vec_col), cent, 1), 1).alias("cell"))
+    q = _side(queries, "q", id_col, vec_col, F.explode(_nearest_centroids(
+        F.col(vec_col), cent, min(n_probe, len(cent)))).alias("cell"))
+    return _bucket_topk(c, q, "cell", k, telemetry)
 
 
 def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.99,
@@ -248,7 +241,6 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.99,
                     F.explode(probes).alias("bucket")))
     b = sig.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
                    F.col("nrm").alias("nb"), F.col("sig").alias("bucket"))
-    from roddy_spark.operators.textdedup import _observe_candidates
     cand = (a.join(b, "bucket")
             .filter(F.col("id_a") < F.col("id_b"))
             .dropDuplicates(["id_a", "id_b"]))

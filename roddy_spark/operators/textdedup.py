@@ -45,11 +45,67 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
             )
 
 
+def band_pairs(df: DataFrame, id_col: str, band_keys: list,
+               payload: tuple[str, ...] = ()) -> DataFrame:
+    """The one candidate step of every banded near-duplicate operator: a
+    self-equi-join of ``df`` on (band, key) — one shuffle keyed by the
+    bucket, never a cross join. ``band_keys`` holds one key Column per
+    band. Returns each pair once as (id_a, id_b) with id_a < id_b, plus
+    every ``payload`` column of both rows suffixed ``_a`` and ``_b``."""
+    keys = F.array(*[F.struct(F.lit(b).alias("band"), k.alias("key"))
+                     for b, k in enumerate(band_keys)])
+    tagged = (df.select(F.col(id_col).alias("id"), *payload,
+                        F.explode(keys).alias("bk"))
+              .select("id", *payload, "bk.band", "bk.key"))
+    l, r = tagged.alias("l"), tagged.alias("r")
+    return (l.join(r, (F.col("l.band") == F.col("r.band"))
+                   & (F.col("l.key") == F.col("r.key"))
+                   & (F.col("l.id") < F.col("r.id")))
+            .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
+                    *[F.col(f"{s}.{c}").alias(f"{c}_{t}")
+                      for s, t in (("l", "a"), ("r", "b")) for c in payload])
+            .dropDuplicates(["id_a", "id_b"]))
+
+
+def hamming_pairs(df: DataFrame, id_col: str, hash_col: str, band_bits: int,
+                  n_bands: int, max_hamming: int) -> DataFrame:
+    """Pairs whose ``hash_col`` values differ in at most ``max_hamming``
+    bits: candidates share one of ``n_bands`` exact ``band_bits``-bit bands
+    (``band_pairs``), then exact hamming = bit_count(xor) verifies
+    JVM-side. With n_bands > max_hamming the banding is exact
+    (pigeonhole: a pair within the distance differs in at most
+    max_hamming bands). Returns (id_a, id_b, hamming)."""
+    mask = F.lit((1 << band_bits) - 1)
+    keys = [F.shiftrightunsigned(F.col(hash_col), b * band_bits)
+            .bitwiseAND(mask) for b in range(n_bands)]
+    xor = F.col(f"{hash_col}_a").bitwiseXOR(F.col(f"{hash_col}_b"))
+    return (band_pairs(df, id_col, keys, (hash_col,))
+            .select("id_a", "id_b", F.bit_count(xor).alias("hamming"))
+            .filter(F.col("hamming") <= max_hamming))
+
+
+def _jaccard_verified(cand: DataFrame, sets: DataFrame,
+                      threshold: float) -> DataFrame:
+    """The one verification step of the candidate paths: join each
+    candidate (id_a, id_b) to both documents' shingle arrays ``sets``
+    (id, sh) and keep the pairs whose exact Jaccard, rounded to 3
+    decimals, reaches ``threshold``. Returns (id_a, id_b, jaccard)."""
+    return (cand
+            .join(sets.select(F.col("id").alias("id_a"),
+                              F.col("sh").alias("sh_a")), "id_a")
+            .join(sets.select(F.col("id").alias("id_b"),
+                              F.col("sh").alias("sh_b")), "id_b")
+            .withColumn("jaccard", F.round(
+                F.size(F.array_intersect("sh_a", "sh_b"))
+                / F.size(F.array_union("sh_a", "sh_b")), 3))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard"))
+
+
 def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.8,
                         text_col: str = "text", id_col: str = "doc_id",
                         max_shingle_freq: int = 1000,
                         prefilter_minhash: bool = False,
-                        prefilter_hashes: int = 8, prefilter_bands: int = 4,
                         telemetry: dict | None = None) -> DataFrame:
     """Near-duplicate pairs by n-gram Jaccard ≥ threshold.
 
@@ -63,13 +119,13 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.8,
     CONTRACT (VERDICT r5 item 5): the exact path is the VERIFICATION
     ORACLE — every co-shingled pair pays a shuffle row per shared shingle,
     which at 50k docs already costs ~5.6× the minhash path for identical
-    output. At corpus scale use ``prefilter_minhash=True`` (or
-    ``minhash_lsh_pairs`` directly): candidates come from MinHash LSH
-    banding (``prefilter_hashes``/``prefilter_bands``; P[candidate] =
-    1-(1-s^r)^b ≈ 0.98 at s=0.8 with the defaults), then ONLY candidates
-    are verified with the same frequency-filtered exact Jaccard —
-    identical precision and per-pair scores, recall bounded by the
-    banding probability instead of 1."""
+    output. At corpus scale use ``prefilter_minhash=True``: candidates
+    come from ``minhash_lsh_pairs``' banding (8 hashes in 4 bands;
+    P[candidate] = 1-(1-s^r)^b ≈ 0.98 at s=0.8), then ONLY candidates go
+    through the same verification step as ``minhash_lsh_pairs``
+    (``_jaccard_verified``), over the frequency-capped shingle sets of
+    the exact path — identical precision and per-pair scores, recall
+    bounded by the banding probability instead of 1."""
     sh = (df.select(F.col(id_col).alias("id"),
                     F.explode(T.word_shingles(text_col, n)).alias("shingle")))
     if not prefilter_minhash:
@@ -114,22 +170,13 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.8,
           .filter(F.col("df_freq") <= max_shingle_freq)
           .select("shingle"),
         "shingle")
-    cand = _lsh_candidates(df, prefilter_hashes, prefilter_bands, n,
-                           text_col, id_col)
-    cand = _observe_candidates(cand, telemetry)
-    # same frequency-filtered shingle sets as the exact path, folded
-    # to one array per doc and joined back to candidates only
-    sh_arr = sh.groupBy("id").agg(F.collect_set("shingle").alias("sh"))
-    return (cand
-            .join(sh_arr.select(F.col("id").alias("id_a"),
-                                F.col("sh").alias("sh_a")), "id_a")
-            .join(sh_arr.select(F.col("id").alias("id_b"),
-                                F.col("sh").alias("sh_b")), "id_b")
-            .withColumn("jaccard", F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")), 3))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard"))
+    cand = _observe_candidates(
+        _lsh_candidates(df, 8, 4, n, text_col, id_col), telemetry)
+    # same frequency-filtered shingle sets as the exact path, one array
+    # per doc
+    return _jaccard_verified(
+        cand, sh.groupBy("id").agg(F.collect_set("shingle").alias("sh")),
+        threshold)
 
 
 def minhash_signatures(df: DataFrame, num_hashes: int = 8, n: int = 3,
@@ -148,24 +195,12 @@ def minhash_signatures(df: DataFrame, num_hashes: int = 8, n: int = 3,
 def _lsh_candidates(df: DataFrame, num_hashes: int, bands: int, n: int,
                     text_col: str, id_col: str) -> DataFrame:
     """MinHash LSH candidate pairs: docs sharing any band of the signature
-    (equi-join on (band, band_key) — one shuffle keyed by bucket, never a
-    cross join). Returns distinct (id_a, id_b) with id_a < id_b."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, num_hashes, n, text_col, id_col)
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws("_", *[F.col(f"mh{b * rows_per_band + r}")
-                               for r in range(rows_per_band)]).alias("key"))
-        for b in range(bands)])
-    buckets = (sig.select("id", F.explode(band_structs).alias("bk"))
-               .select("id", "bk.band", "bk.key"))
-    l, r = buckets.alias("l"), buckets.alias("r")
-    return (l.join(r, (F.col("l.band") == F.col("r.band"))
-                   & (F.col("l.key") == F.col("r.key"))
-                   & (F.col("l.id") < F.col("r.id")))
-            .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-            .distinct())
+    (``band_pairs``). Returns distinct (id_a, id_b) with id_a < id_b."""
+    rows = num_hashes // bands
+    keys = [F.concat_ws("_", *[F.col(f"mh{b * rows + r}")
+                               for r in range(rows)]) for b in range(bands)]
+    return band_pairs(minhash_signatures(df, num_hashes, n, text_col, id_col),
+                      "id", keys)
 
 
 def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 8, bands: int = 4,
@@ -175,22 +210,14 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 8, bands: int = 4,
                       telemetry: dict | None = None) -> DataFrame:
     """MinHash + LSH banding: docs sharing any band of the signature become
     candidate pairs (equi-join on (band, band_key)); candidates are then
-    verified with exact Jaccard. Returns (id_a, id_b, jaccard)."""
-    cand = _lsh_candidates(df, num_hashes, bands, n, text_col, id_col)
-    cand = _observe_candidates(cand, telemetry)
-    # verify candidates with exact Jaccard (join back the shingle sets)
-    sh = (df.select(F.col(id_col).alias("id"),
-                    T.word_shingles(text_col, n).alias("sh")))
-    verified = (cand
-                .join(sh.select(F.col("id").alias("id_a"),
-                                F.col("sh").alias("sh_a")), "id_a")
-                .join(sh.select(F.col("id").alias("id_b"),
-                                F.col("sh").alias("sh_b")), "id_b")
-                .withColumn("jaccard", F.round(
-                    F.size(F.array_intersect("sh_a", "sh_b"))
-                    / F.size(F.array_union("sh_a", "sh_b")), 3))
-                .filter(F.col("jaccard") >= threshold))
-    return verified.select("id_a", "id_b", "jaccard")
+    verified with exact Jaccard over the row-local shingle sets. Returns
+    (id_a, id_b, jaccard)."""
+    cand = _observe_candidates(
+        _lsh_candidates(df, num_hashes, bands, n, text_col, id_col),
+        telemetry)
+    sets = df.select(F.col(id_col).alias("id"),
+                     T.word_shingles(text_col, n).alias("sh"))
+    return _jaccard_verified(cand, sets, threshold)
 
 
 def simhash_near_pairs(df: DataFrame, max_hamming: int = 2,
@@ -203,27 +230,10 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 2,
     least one exact band, so candidates come from an equi-join on
     (band, band_value), never a cross join; exact hamming verifies."""
     n_bands = max_hamming + 1
-    band_bits = 16 // n_bands
     s = df.select(F.col(id_col).alias("id"),
                   T.simhash16(text_col).alias("simhash"))
-    bands = F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.shiftright(F.col("simhash"), b * band_bits)
-                  .bitwiseAND(F.lit((1 << band_bits) - 1)).alias("val"))
-        for b in range(n_bands)])
-    tagged = (s.withColumn("b", F.explode(bands))
-              .select("id", "simhash", "b.band", "b.val"))
-    l, r = tagged.alias("l"), tagged.alias("r")
-    return (l.join(r, (F.col("l.band") == F.col("r.band"))
-                   & (F.col("l.val") == F.col("r.val"))
-                   & (F.col("l.id") < F.col("r.id")))
-            .select(F.col("l.id").alias("id_a"),
-                    F.col("r.id").alias("id_b"),
-                    F.bit_count(F.col("l.simhash")
-                                .bitwiseXOR(F.col("r.simhash")))
-                    .alias("hamming"))
-            .dropDuplicates(["id_a", "id_b"])
-            .filter(F.col("hamming") <= max_hamming))
+    return hamming_pairs(s, "id", "simhash", 16 // n_bands, n_bands,
+                         max_hamming)
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",

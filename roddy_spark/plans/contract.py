@@ -1266,7 +1266,7 @@ def q_phash_banding(spark, sf_dir):
                      .alias("image_id"),
                      ph.bitwiseXOR(flip1).bitwiseXOR(flip2).alias("phash")))
     allp = base.unionByName(twins)
-    return (phash_near_duplicates(allp, max_hamming=3, band_bits=16)
+    return (phash_near_duplicates(allp, max_hamming=3)
             .select("a", "b", F.col("hamming").cast("int").alias("hamming")))
 
 

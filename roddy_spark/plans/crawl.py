@@ -14,14 +14,15 @@ whose paths all go through Hadoop ``FileSystem`` (roddy_spark/fs.py).
 Per-batch dataflow (each arrow is declarative DataFrame API; Python runs
 only in Arrow passes: canonicalize, robots, bloom probe, link extraction):
 
-  candidates ─ admit(admission_filters → in-batch dedup → bloom+anti-join
-               → seq) ─► visited write (+ the bloom delta), read back ─┐
-  pending ────────────────────────────────────────────────────────────► pool
-  pool ─ politeness_flags(per-host window budget) ─► flagged (persisted)
-  flagged ─ NOT fetch ─► deferred ─► pending write (fills the cache)
-  flagged ─ fetch ─► to_fetch ─ fetch(join vs pages) ─► fetches write
-                     (mark-at-admission already persisted BEFORE this step;
-                     the cache is released after the fetches write)
+  candidates ─ admit(admission_filters → bloom probe → in-batch dedup →
+               anti-join of the maybe-seen → seq) ─► visited write
+               (+ the bloom delta), read back ─┐
+  pending ─────────────────────────────────────┴─► pool
+  pool ─ politeness_flags(per-host window budget) ─► flagged ─► pending
+         write (the whole flagged pool), read back as two filters:
+    ─ NOT fetch ─► next batch's pending
+    ─ fetch ─► to_fetch ─ fetch(join vs pages) ─► fetches write
+               (mark-at-admission already persisted BEFORE this step)
   fetched ─ expand = link_rows(linkable pages ─ extract_links_fast ─
             <base href> ─ resolve+canonicalize) ─►
       next candidates (depth+1; rel="next" keeps depth, priority 0 — D8)
@@ -29,13 +30,16 @@ only in Arrow passes: canonicalize, robots, bloom probe, link extraction):
 Below 20k candidates ``seq`` is a one-partition window (operators/rank.py),
 so admission runs no job of its own; the politeness windows run once per
 batch, in the pending write, which shuffles the pool once on (host,
-salt); the fetch broadcasts the frontier once and scans the pages once.
+salt) and holds no cache (a cached pool costs the write a job of its
+own under AQE); the fetch and the next batch's pool are filters of the
+written snapshot. The fetch broadcasts the frontier once and scans the
+pages once.
 With the filter live, the batch's admitted hashes ride the visited write
 when the candidate count bounds them under the delta cap, so the merge
 reads nothing back. The fetches and candidates writes spread to a
 data-sized width only when that width is above 1 (mid-size batches); a
 small batch is written as its stage leaves it, with no exchange job. A
-small batch runs at most 12 Spark jobs (pinned by tests/test_crawl_e2e.py).
+small batch runs at most 11 Spark jobs (pinned by tests/test_crawl_e2e.py).
 
 ``admission_filters`` and ``link_rows`` are also the DFS fixpoint's
 filter and link steps (plans/dfs.py): one policy for both visit orders.
@@ -66,7 +70,7 @@ from roddy_spark.functions import urls as U
 from roddy_spark.operators.admission import admit
 from roddy_spark.operators.dedup import (bloom_delta_metric,
                                          refresh_visited_bloom)
-from roddy_spark.operators.politeness import (politeness_flags,
+from roddy_spark.operators.politeness import (FETCH, politeness_flags,
                                               split_flagged)
 from roddy_spark.operators.rank import release_rank_caches
 from roddy_spark.streaming.events import fetch_rate_metrics
@@ -110,15 +114,17 @@ CANDIDATE_SCHEMA = StructType([
 ])
 
 
-def _row_bytes_agg(df: DataFrame):
+def _row_bytes_agg(df: DataFrame, where=None):
     """Approximate serialized bytes of a frontier batch's VARIABLE-width
     columns, as a write-time Observation aggregate — JSON length is a
     close-enough proxy for broadcast sizing (fixed-width columns are added
     as a per-row constant by the caller). Rides on the batch write; no
-    extra job."""
+    extra job. ``where`` (a boolean Column) counts only the rows it
+    holds for."""
     var_cols = [c for c in ("url_norm", "host", "ctx") if c in df.columns]
-    return F.sum(F.coalesce(
-        F.octet_length(F.to_json(F.struct(*var_cols))), F.lit(0)))
+    size = F.coalesce(F.octet_length(F.to_json(F.struct(*var_cols))),
+                      F.lit(0))
+    return F.sum(size if where is None else F.when(where, size))
 
 
 class SnapshotStore:
@@ -578,6 +584,8 @@ class Crawler:
             store.rollback_table("cookies", batch)
             candidates = store.read(spark, "candidates", batch)
             pending = store.read(spark, "pending", batch)
+            if pending is not None:
+                pending = split_flagged(pending)[1]
             visited = store.read_visited(spark)
             # latest-committed, not exact-batch: the jar is written only on
             # batches that SET cookies, so the completed batch may carry no
@@ -668,21 +676,23 @@ class Crawler:
 
             # 2. politeness: pending ∪ newly admitted → fetch now vs defer.
             # With no per-host budget nothing is ever deferred — skip the
-            # pending table's IO entirely. The flagged pool is persisted so
-            # its windows run once: the pending write fills the cache and
-            # the fetch reads its to_fetch side (several plan branches).
-            obs_def = flagged = None
+            # pending table's IO entirely. The flagged pool itself is the
+            # pending snapshot, so its windows run once, in that write;
+            # the fetch and the next batch's pool are filters of it.
+            obs_def = None
             if cfg.per_host_budget:
                 pool = admitted if pending is None else (
                     pending.select(*admitted.columns).unionByName(admitted))
                 flagged = politeness_flags(
-                    pool, cfg.per_host_budget, cfg.salt_buckets).persist()
-                to_fetch, deferred = split_flagged(flagged)
+                    pool, cfg.per_host_budget, cfg.salt_buckets)
+                deferred = ~F.col(FETCH)
                 obs_def = Observation(f"def_{batch}")
-                store.write(deferred.observe(
-                    obs_def, F.count(F.lit(1)).alias("n"),
-                    _row_bytes_agg(deferred).alias("bytes")),
+                store.write(flagged.observe(
+                    obs_def, F.count_if(deferred).alias("n"),
+                    _row_bytes_agg(flagged, deferred).alias("bytes")),
                     "pending", batch)
+                to_fetch, pending = split_flagged(
+                    store.read(spark, "pending", batch))
             else:
                 to_fetch = admitted
 
@@ -757,8 +767,6 @@ class Crawler:
             if spread and "num_partitions" not in fparams:
                 fetched = fetched.repartition(w)
             store.write(fetched, "fetches", batch)
-            if flagged is not None:
-                flagged.unpersist()
             fetched = store.read(spark, "fetches", batch)
             n_fetched = int(obs_f.get["n"])
             n_ok = int(obs_f.get["ok"] or 0)
@@ -853,7 +861,6 @@ class Crawler:
             candidates = store.read(spark, "candidates", batch)
             n_cand = n_next
             if cfg.per_host_budget:
-                pending = store.read(spark, "pending", batch)
                 n_pending = next_pending_n
                 pending_bytes = next_pending_bytes
             visited = store.read_visited(spark)

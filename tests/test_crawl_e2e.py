@@ -189,7 +189,7 @@ def test_metrics_computed_from_fetches(spark, web_fixture, tmp_path):
 
 def test_crawl_batch_job_budget(spark, web_fixture, tmp_path, monkeypatch):
     """Each micro-batch of a crawl with a per-host budget, deferral and
-    the visited bloom runs at most 12 Spark jobs, and a read of a table
+    the visited bloom runs at most 11 Spark jobs, and a read of a table
     the store wrote runs none (the store reads with the schema it wrote,
     so there is no footer-inference job). Jobs are grouped per batch by
     switching the job group at each manifest commit."""
@@ -243,6 +243,6 @@ def test_crawl_batch_job_budget(spark, web_fixture, tmp_path, monkeypatch):
     assert len(state.batches) == 2 and len(commits) == 4
     assert all(m["pending_n"] > 0 for m in commits[1:3]), "no deferral"
     per_batch = [jobs(f"{tag}-c{k}") for k in (1, 2)]
-    assert all(0 < n <= 12 for n in per_batch), per_batch
+    assert all(0 < n <= 11 for n in per_batch), per_batch
     read_jobs = {g: (t, jobs(g)) for t, g in reads}
     assert reads and all(n == 0 for _, n in read_jobs.values()), read_jobs

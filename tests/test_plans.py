@@ -439,35 +439,53 @@ def test_bucketed_admit_keeps_visited_unshuffled(spark, tmp_path, buckets,
 
 
 def test_bloom_split_keeps_fresh_rows_off_the_join(spark, tmp_path):
-    """A bloom-on admission routes the bloom-negative rows around the
-    anti-join: in the executed plan of the admitted rows (the plan the
-    crawl's visited write runs), one probe feeds the join and the other
-    side of the split reaches no join. Each probe sits above
-    ``first_occurrence``'s aggregate and neither runs on the visited
-    side (a Python pass over the whole history)."""
+    """A bloom-on admission probes each candidate once and routes the
+    bloom-negative rows around the anti-join: in the executed plan of the
+    admitted rows (the plan the crawl's visited write runs, here with
+    sort-merge joins, over a plain and a bucketed visited table), exactly
+    one probe runs, below ``first_occurrence``'s exchange on url_hash
+    (whose output both sides of the split read), no probe runs over the
+    visited scan (a Python pass over the whole history), and the
+    bloom-negative side reaches no join."""
+    import re
+
     from roddy_spark.config import CrawlConfig
     from roddy_spark.operators.admission import admit
 
-    cand, visited = _bucketed_admit_inputs(spark, str(tmp_path / "ck"), 0)
-    out = admit(cand, CrawlConfig(), visited, _visited_bloom(visited),
-                admitted_so_far=1000,
-                num_partitions=1)
-    got = out.collect()
-    assert sorted(r["seq"] for r in got) == list(range(1000, 1157))
-    lines, parents = _tree(plan_of(out, "simple"))
-    probes = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
-    assert len(probes) == 2, "\n".join(lines)
-    joins = [i for i, ln in enumerate(lines) if "Join" in ln]
-    assert len(joins) == 1, "\n".join(lines)
-    joined = [i for i in probes if joins[0] in _ancestors(parents, i)]
-    assert len(joined) == 1, "\n".join(lines)
-    for probe in probes:
-        below = [i for i in range(len(lines))
-                 if probe in _ancestors(parents, i)]
-        assert any("Aggregate" in lines[i] or "ReusedExchange" in lines[i]
-                   for i in below), "\n".join(lines)
-        assert not any("Scan" in lines[i] and "visited" in lines[i]
-                       for i in below), "\n".join(lines)
+    for buckets in (0, 4):
+        cand, visited = _bucketed_admit_inputs(
+            spark, str(tmp_path / f"ck{buckets}"), buckets)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            out = admit(cand, CrawlConfig(visited_buckets=buckets), visited,
+                        _visited_bloom(visited), admitted_so_far=1000,
+                        num_partitions=1)
+            got = out.collect()
+            lines, parents = _tree(plan_of(out, "simple"))
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                           str(64 * 1024 * 1024))
+        plan = "\n".join(lines)
+        assert sorted(r["seq"] for r in got) == list(range(1000, 1157))
+        probes = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
+        assert len(probes) == 1, plan
+        up = _ancestors(parents, probes[0])
+        exchange = next(i for i in up if "Exchange" in lines[i])
+        assert "hashpartitioning(url_hash" in lines[exchange], plan
+        assert any("min_by(" in lines[i] and "partial_min_by(" not in lines[i]
+                   for i in up), plan
+        # the candidates come from a Range: the one scan is the visited one
+        scans = [i for i, ln in enumerate(lines) if "FileScan" in ln]
+        assert len(scans) == 1, plan
+        assert probes[0] not in _ancestors(parents, scans[0]), plan
+        joins = [i for i, ln in enumerate(lines) if "Join" in ln]
+        assert len(joins) == 1, plan
+        side = {neg: [i for i, ln in enumerate(lines) if "Filter" in ln
+                      and re.search(neg + r"__first#\d+\.__maybe_seen", ln)]
+                for neg in ("NOT ", "AND ")}
+        assert len(side["NOT "]) == 1 and len(side["AND "]) == 1, plan
+        assert joins[0] not in _ancestors(parents, side["NOT "][0]), plan
+        assert joins[0] in _ancestors(parents, side["AND "][0]), plan
 
 
 def test_c4_filters_zero_exchange(spark, sf_dir):
@@ -617,3 +635,58 @@ def test_gopher_line_stats_zero_exchange(spark, sf_dir):
     p = plan_of(TQ.gopher_line_stats(docs), "simple")
     assert "Exchange" not in p, p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p
+
+
+
+# Exchange nodes (shuffle, broadcast and reused) in the executed plan of
+# each banded near-duplicate and top-k operator on small fixed inputs,
+# measured before these operators came to share one band join
+# (textdedup.band_pairs), one Jaccard verification and one rank tail.
+_NEAR_DUP_EXCHANGES = {
+    "minhash_lsh_pairs": 9, "ngram_jaccard_exact": 8,
+    "ngram_jaccard_prefilter": 12, "simhash_near_pairs": 5,
+    "phash_near_duplicates": 2, "brute_force_topk": 2, "lsh_topk": 3,
+    "ivf_topk": 3,
+}
+
+
+@pytest.mark.parametrize("case", list(_NEAR_DUP_EXCHANGES))
+def test_near_dup_exchange_budget(spark, sf_dir, case):
+    """Each near-duplicate operator's executed plan keeps its Exchange
+    count: a shared candidate or verification step that made one of them
+    shuffle or broadcast more would fail here."""
+    from roddy_spark.operators import images as I
+    from roddy_spark.operators import similarity as S
+    from roddy_spark.operators import textdedup as D
+
+    base = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .select("doc_id", "text").limit(60))
+    docs = base.unionByName(base.select(
+        (F.col("doc_id") + 100000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" tail words")).alias("text")))
+    ph = spark.range(0, 80).select(
+        F.concat(F.lit("i"), F.col("id").cast("string")).alias("image_id"),
+        F.xxhash64("id").alias("phash"))  # signed: negative hashes too
+    ph = ph.unionByName(ph.select(
+        F.concat("image_id", F.lit("b")).alias("image_id"),
+        F.col("phash").bitwiseXOR(F.lit(5)).alias("phash")))
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q, c = embs.filter(F.col("vec_id") < 5), embs.filter(F.col("vec_id") < 200)
+    build = {
+        "minhash_lsh_pairs": lambda: D.minhash_lsh_pairs(docs, threshold=0.5),
+        "ngram_jaccard_exact": lambda: D.ngram_jaccard_pairs(docs),
+        "ngram_jaccard_prefilter": lambda: D.ngram_jaccard_pairs(
+            docs, prefilter_minhash=True),
+        "simhash_near_pairs": lambda: D.simhash_near_pairs(docs,
+                                                           max_hamming=3),
+        "phash_near_duplicates": lambda: I.phash_near_duplicates(
+            ph, max_hamming=4),
+        "brute_force_topk": lambda: S.brute_force_topk(q, c, k=3),
+        "lsh_topk": lambda: S.lsh_topk(q, c, k=3),
+        "ivf_topk": lambda: S.ivf_topk(q, c, k=3, n_probe=2),
+    }
+    df = build[case]()
+    assert df.collect()
+    lines, _ = _tree(plan_of(df, "simple"))
+    exchanges = [ln for ln in lines if "Exchange" in ln]
+    assert len(exchanges) == _NEAR_DUP_EXCHANGES[case], "\n".join(lines)
