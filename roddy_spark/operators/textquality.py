@@ -98,13 +98,23 @@ def _mean_over_tokens(docs: DataFrame, text_col: str, id_col: str,
     ``ssum`` divided by its token count, rounded to 4 decimals (0.0 for
     no tokens). The tokens are selected into a column once and the three
     uses read it; naming the tokenizer in each tokenized every document
-    three times (see functions/text.py)."""
+    three times (see functions/text.py).
+
+    A negative mean that rounds to zero gives -0.0, as IEEE rounding does
+    (Python, DuckDB): Spark's ``round`` goes through ``BigDecimal``, which
+    has no negative zero. The mean is a column of its own, so the sign
+    test does not run the fold a second time."""
     toks = docs.select(F.col(id_col), T.tokens(text_col).alias("__toks"))
     n_tok = F.coalesce(F.size("__toks"), F.lit(0))  # null text: 0 tokens
-    return toks.select(
+    means = toks.select(
         F.col(id_col), n_tok.cast("long").alias("n_tokens"),
-        F.round(F.when(n_tok > 0, ssum(F.col("__toks")) / n_tok)
-                .otherwise(F.lit(0.0)), 4).alias(name))
+        F.when(n_tok > 0, ssum(F.col("__toks")) / n_tok)
+        .otherwise(F.lit(0.0)).alias("__mean"))
+    rounded = F.round("__mean", 4)
+    return means.select(
+        F.col(id_col), "n_tokens",
+        F.when(F.col("__mean") < 0, -F.abs(rounded))
+        .otherwise(rounded).alias(name))
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text",

@@ -16,6 +16,9 @@ prints one JSON line per batch (batch 0 is the seed write):
   plan_s  cProfile cumulative seconds inside ``admit``,
           ``politeness_flags``, ``fetch_join`` and ``expand``: the driver
           building their plans (at width 1 none of them runs a job)
+  compiled    classes Spark's codegen compiled in the batch (a class
+              found in the codegen cache is not compiled again)
+  compile_s   seconds Janino spent compiling them
 
 cProfile slows the driver down, so ``secs`` and the call seconds are
 higher than in an unprofiled run; compare them only with each other.
@@ -95,6 +98,16 @@ class Profiler:
         self.patches: list[tuple[object, str, object]] = []
         self.prof = cProfile.Profile()
         self.t0 = time.perf_counter()
+        jvm = spark._jvm
+        self.compiles = (jvm.org.apache.spark.metrics.source.CodegenMetrics
+                         .METRIC_COMPILATION_TIME())
+        codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen
+        self.codegen = codegen.CodeGenerator
+        self.codegen0 = self._codegen()
+
+    def _codegen(self) -> tuple[int, int]:
+        """(classes compiled, nanoseconds compiling) so far in the JVM."""
+        return self.compiles.getCount(), self.codegen.compileTime()
 
     def _set_group(self, g: str) -> None:
         self.sc.setJobGroup(g, g)
@@ -130,6 +143,7 @@ class Profiler:
     def start(self) -> None:
         self._set_group(f"profile-batch{self.batch}")
         self.t0 = time.perf_counter()
+        self.codegen0 = self._codegen()
         self.prof = cProfile.Profile()
         self.prof.enable()
 
@@ -147,6 +161,8 @@ class Profiler:
         """Close the batch the commit of ``manifest`` ends and print it."""
         self.prof.disable()
         secs = time.perf_counter() - self.t0
+        compiled, compile_ns = (b - a for a, b in zip(self.codegen0,
+                                                      self._codegen()))
         plan = dict.fromkeys(PLAN_FUNCS, 0.0)
         for (path, _, fn), row in pstats.Stats(self.prof).stats.items():
             if fn in PLAN_FUNCS and path.endswith(PLAN_FUNCS[fn]):
@@ -163,6 +179,7 @@ class Profiler:
             "batch": self.batch, "secs": round(secs, 3), "jobs_total":
             len(jobs), "calls": calls, "jobs": jobs,
             "plan_s": {k: round(v, 4) for k, v in plan.items()},
+            "compiled": compiled, "compile_s": round(compile_ns / 1e9, 4),
             "admitted": (manifest.get("batches") or [{}])[-1].get(
                 "admitted") if self.batch else None}), flush=True)
         self.calls = []

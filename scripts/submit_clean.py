@@ -44,6 +44,8 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from roddy_spark.session import ENGINE_CONF
+
 
 def parse_args():
     p = argparse.ArgumentParser()
@@ -99,9 +101,7 @@ def parse_args():
 def main():
     args = parse_args()
     spark = (SparkSession.builder.appName("roddy-spark-clean")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .getOrCreate())
+             .config(map=ENGINE_CONF).getOrCreate())
 
     from roddy_spark.functions import text as T
     from roddy_spark.operators import textdedup as TD

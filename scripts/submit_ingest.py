@@ -24,6 +24,8 @@ import json
 
 from pyspark.sql import SparkSession
 
+from roddy_spark.session import ENGINE_CONF
+
 
 def parse_args():
     p = argparse.ArgumentParser()
@@ -44,9 +46,7 @@ def parse_args():
 def main():
     args = parse_args()
     spark = (SparkSession.builder.appName("roddy-spark-ingest")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .getOrCreate())
+             .config(map=ENGINE_CONF).getOrCreate())
 
     from roddy_spark.config import CrawlConfig
     from roddy_spark.streaming.frontier import FrontierIngest

@@ -30,3 +30,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TESTDATA
+
+
+@pytest.fixture(scope="session")
+def compiled_classes(spark):
+    """Reads the JVM's running count of classes Spark's codegen compiled
+    (whole-stage and expression code; a class served from the codegen
+    cache is not counted)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount

@@ -83,3 +83,32 @@ def test_rows_only_queries_run(spark, name):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_nb_quality_keeps_the_sign_of_zero(spark):
+    """nb_quality against its DuckDB twin at sf0.01 (the sibling of the
+    contract data directory), with zeros compared by sign: doc 395 there
+    has a small negative mean log-odds that rounds to -0.0. ``==`` and
+    ``test_query_matches_oracle`` take -0.0 for 0.0; a hash of the rows
+    does not."""
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{sf}/documents.parquet')")
+
+    def signed(v):
+        if isinstance(v, float):
+            return round(v, 6), math.copysign(1.0, v)
+        return v
+
+    def rowset(cols, rows):
+        idx = sorted(range(len(cols)), key=lambda i: cols[i])
+        return sorted(tuple(signed(r[i]) for i in idx) for r in rows)
+
+    sdf = entrymod.queries()["nb_quality"](spark, sf)
+    got = rowset(sdf.columns, sdf.collect())
+    res = con.execute(entrymod.oracle_sql()["nb_quality"])
+    want = rowset([d[0] for d in res.description], res.fetchall())
+    assert (0.0, -1.0) in {v for row in want for v in row}, "no -0.0 score"
+    mism = [(a, b) for a, b in zip(got, want) if a != b]
+    assert len(got) == len(want) and not mism, mism[:3]

@@ -246,3 +246,27 @@ def test_crawl_batch_job_budget(spark, web_fixture, tmp_path, monkeypatch):
     assert all(0 < n <= 11 for n in per_batch), per_batch
     read_jobs = {g: (t, jobs(g)) for t, g in reads}
     assert reads and all(n == 0 for _, n in read_jobs.values()), read_jobs
+
+
+def test_repeated_crawl_reuses_compiled_classes(spark, web_fixture,
+                                                tmp_path, compiled_classes):
+    """A second crawl of the same web, into a fresh checkpoint, finds its
+    generated classes in Spark's codegen cache. Only the fetch write's
+    2 classes per batch recompile: ``fetched_at`` is folded to a
+    timestamp literal that the generated code inlines. With Spark's
+    default 100-entry cache the second crawl compiled 77 classes."""
+    _, pages_df, _ = web_fixture
+    config = CrawlConfig(max_depth=3, per_host_budget=2, bloom_mode="on")
+    seeds = ["http://h0.test/", "http://h0.test/p/1", "http://h0.test/p/2",
+             "http://h1.test/"]
+
+    def crawl(name):
+        before = compiled_classes()
+        state = Crawler(spark, config, pages_df, str(tmp_path / name),
+                        max_batches=2).run(seeds)
+        return state, compiled_classes() - before
+
+    crawl("first")
+    state, compiled = crawl("second")
+    assert len(state.batches) == 2
+    assert compiled <= 2 * len(state.batches), compiled

@@ -3,6 +3,8 @@ embeddings / events)."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -383,6 +385,43 @@ def test_canonical_docs_over_lsh_pairs(spark, docs):
     # every keeper is a member of its own cluster
     for _id, (cid, kid) in rows.items():
         assert rows[kid][0] == cid
+
+
+def test_repeated_near_dup_reuses_compiled_classes(spark, compiled_classes):
+    """A second exact-Jaccard → ``canonical_docs`` pass over the same
+    corpus finds every generated class in Spark's codegen cache. The
+    corpus holds 4 chains of 6 docs, each one word off its predecessor,
+    so components take several rounds. AQE is off in this session: AQE
+    re-plans as each query stage finishes, and which side of a small join
+    it broadcasts can depend on which stage finished first; a repeat run
+    then compiles a few join classes of the other shape (0-8 seen per
+    run), which is plan churn rather than cache eviction. With Spark's
+    default 100-entry cache the second pass compiled 83 classes."""
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(500)]
+    texts = []
+    for _ in range(4):
+        words = [rng.choice(vocab) for _ in range(40)]
+        for _ in range(6):
+            texts.append(" ".join(words))
+            words = list(words)
+            words[rng.randrange(40)] = rng.choice(vocab)
+    texts += [" ".join(rng.choice(vocab) for _ in range(40))
+              for _ in range(30)]
+    static = spark.newSession()
+    static.conf.set("spark.sql.adaptive.enabled", "false")
+    docs = static.createDataFrame(list(enumerate(texts)),
+                                  "doc_id long, text string")
+
+    def resolve():
+        before, stats = compiled_classes(), {}
+        keep = D.canonical_docs(docs, D.ngram_jaccard_pairs(docs),
+                                stats=stats).collect()
+        keepers = sum(r["id"] == r["keeper_id"] for r in keep)
+        return keepers, stats["rounds"], compiled_classes() - before
+
+    assert resolve()[:2] == (34, 4)
+    assert resolve() == (34, 4, 0)
 
 
 def test_decontaminate_flags_ngram_overlap(spark):
